@@ -74,20 +74,20 @@ object BenchExtra {
           spark.sparkContext.getPersistentRDDs.values
             .foreach(_.unpersist(blocking = true))
         }
+        // a failed run carries no time: it is None, never a sentinel that
+        // could pass for a measurement
         val runs = (1 to reps).map { _ =>
           val t0 = System.nanoTime()
-          var failed = false
-          try {
-            val df = fn(spark, sfDir)
-            if (noop) df.write.format("noop").mode("overwrite").save()
-            else df.count()
-          } catch { case e: Throwable =>
-            failed = true
-            System.err.println(s"[benchextra] $name failed: ${e.getMessage}") }
-          // a failed run must never become the per-query minimum — record
-          // it as +inf-ish so the JSON's min/total only reflect real runs
           val secs =
-            if (failed) 9999.0 else (System.nanoTime() - t0) / 1e9
+            try {
+              val df = fn(spark, sfDir)
+              if (noop) df.write.format("noop").mode("overwrite").save()
+              else df.count()
+              Some((System.nanoTime() - t0) / 1e9)
+            } catch { case e: Throwable =>
+              System.err.println(s"[benchextra] $name failed: ${e.getMessage}")
+              None
+            }
           spark.catalog.clearCache()
           spark.sparkContext.getPersistentRDDs.values
             .foreach(_.unpersist(blocking = true))
@@ -97,14 +97,19 @@ object BenchExtra {
         name -> runs
       }
     }
-    val qs = results.map { case (k, v) => "\"" + k + f"\":${v.min}%.3f" }
+    def num(s: Option[Double]) = s.fold("null")(v => f"$v%.3f")
+    val best = results.map { case (k, v) => k -> v.flatten.minOption }
+    val qs = best.map { case (k, m) => "\"" + k + "\":" + num(m) }
       .mkString("{", ",", "}")
     val qruns = results.map { case (k, v) =>
-      "\"" + k + "\":[" + v.map(s => f"$s%.3f").mkString(",") + "]" }
+      "\"" + k + "\":[" + v.map(num).mkString(",") + "]" }
       .mkString("{", ",", "}")
-    val total = results.map(_._2.min).sum
+    // a query whose every run failed has no minimum: listed, not summed
+    val failed = best.collect { case (k, None) => "\"" + k + "\"" }
+      .mkString("[", ",", "]")
+    val total = best.flatMap(_._2).sum
     println(f"""{"metric":"extra_total","value":$total%.3f,"unit":"sec","best_of":$reps,""" +
-      s""""queries":$qs,"query_runs":$qruns,"sf":"$sfDir","noop":$noop}""")
+      s""""queries":$qs,"query_runs":$qruns,"failed":$failed,"sf":"$sfDir","noop":$noop}""")
     spark.stop()
   }
 }

@@ -532,10 +532,7 @@ object SparkEntry {
 
     "g_hits" -> { (s, dir) =>
       import s.implicits._
-      // computeDelta = false: the per-superstep max|Δhub| is a diagnostic
-      // this query throws away (guide §1.2), one action per superstep saved
-      val res = Hits.run(derivedVerts(s, dir), derivedEdges(s, dir),
-        maxIter = 10, computeDelta = false)
+      val res = Hits.run(derivedVerts(s, dir), derivedEdges(s, dir), maxIter = 10)
       res.scores.select($"id", round($"hub", 6).as("hub"),
         round($"auth", 6).as("auth"))
     },

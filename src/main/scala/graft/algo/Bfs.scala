@@ -34,48 +34,8 @@ object Bfs {
   /** Single-source distances (unidirectional BFS, G2). Returns (id, dist,
     * parent) for every reachable vertex; parent is the min-id predecessor
     * (deterministic). */
-  def distances(edges: Dataset[Edge], start: Long, maxDepth: Int = Int.MaxValue): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    // cache the edge table once: every superstep joins the frontier against
-    // it, and without the cache each superstep re-ran the full upstream
-    // lineage (scan + distinct for the derived graphs)
-    val preCached = edges.storageLevel !=
-      org.apache.spark.storage.StorageLevel.NONE
-    val e = edges.toDF()
-    if (!preCached) e.persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var visited = Seq((start, -1L, 0)).toDF("id", "parent", "dist")
-      .localCheckpoint(true)
-    var frontier = visited
-    var depth = 0
-    var frontierCount = 1L
-    while (frontierCount > 0 && depth < maxDepth) {
-      val expanded = frontier
-        .join(e, frontier("id") === e("src"))
-        .select($"dst".as("id"), $"src".as("parent"), ($"dist" + 1).as("dist"))
-      val next = expanded
-        .join(visited.select($"id".as("vid")), $"id" === $"vid", "left_anti")
-        .groupBy($"id")
-        .agg(min($"parent").as("parent"), first($"dist").as("dist"))
-        .localCheckpoint(true)
-      frontierCount = next.count()
-      // the visited set is a union of per-depth CHECKPOINTED deltas — the
-      // round-6 shape re-checkpointed the whole union every superstep,
-      // rewriting O(visited) bytes per level; the lazy union reads the same
-      // bytes without the rewrite. The union is COLLAPSED every 32 levels:
-      // unbounded nesting makes the per-superstep anti-join re-analyze an
-      // O(depth)-deep plan (O(depth²) driver work, and a Catalyst stack
-      // overflow on path-shaped graphs), so the rewrite cost is amortized
-      // to 1/32 of the round-6 shape instead of removed outright
-      visited = visited.union(next)
-      if (depth % 32 == 31) visited = visited.localCheckpoint(true)
-      frontier = next
-      depth += 1
-    }
-    if (!preCached) e.unpersist()
-    visited
-  }
+  def distances(edges: Dataset[Edge], start: Long, maxDepth: Int = Int.MaxValue): DataFrame =
+    levels(edges, start, maxDepth, None)
 
   /**
    * Resumable single-source BFS with FRONTIER-DELTA commits: the visited set
@@ -85,48 +45,56 @@ object Bfs {
    * depth ~20 a full-visited commit would rewrite the table ~20×). The
    * committed state stays the union of all deltas, so resume (and
    * time-travel) read the identical visited set — kill the JVM at any depth,
-   * re-run, get the byte-identical final result. The frontier itself is
-   * re-read from the latest delta's files (O(frontier) input), and its row
-   * count comes from the commit manifest — no per-superstep count job.
+   * re-run, get the byte-identical final result. Each superstep expands the
+   * frontier re-read from the latest delta's files (O(frontier) input).
    */
   def distancesResumable(
       edges: Dataset[Edge],
       start: Long,
       log: graft.state.Supersteps,
-      maxDepth: Int = Int.MaxValue): DataFrame = {
+      maxDepth: Int = Int.MaxValue): DataFrame =
+    levels(edges, start, maxDepth, Some(log))
+
+  /** The one level-synchronous loop behind [[distances]] and
+    * [[distancesResumable]]: the state is the frontier (one level), each
+    * superstep's delta its size, so an empty frontier is the fixpoint. */
+  private def levels(edges: Dataset[Edge], start: Long, maxDepth: Int,
+      log: Option[graft.state.Supersteps]): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val e = edges.toDF()
-    var depth = log.lastCompleted.getOrElse(-1)
-    var frontierCount = 0L
-    var visited: DataFrame = null
-    if (depth < 0) {
-      val init = Seq((start, -1L, 0)).toDF("id", "parent", "dist")
-      depth = 0
-      val (state, n) = log.appendDelta(0, init, SuperstepMetric("bfs", 0, 1L, 0L, 0L, -1.0))
-      visited = state; frontierCount = n
-    } else {
-      visited = log.readState()
-      frontierCount = log.lastAppendedRows.getOrElse(
-        visited.filter($"dist" === depth).count())
+    val seed = Seq((start, -1L, 0)).toDF("id", "parent", "dist")
+    // every superstep joins the frontier against the edges: cached for the
+    // whole loop, or each superstep re-runs the full upstream lineage
+    Layout.withCached(edges) { e =>
+      var visited = log.filter(_.lastCompleted.nonEmpty).fold(seed)(_.readState())
+      var unions = 0
+      Superstep.iterate("bfs", log.fold[Superstep.Sink](Superstep.Checkpoint)(Superstep.Append),
+          maxDepth)(seed) { (frontier, _) =>
+        frontier
+          .join(e, frontier("id") === e("src"))
+          .select($"dst".as("id"), $"src".as("parent"), ($"dist" + 1).as("dist"))
+          .join(visited.select($"id".as("vid")), $"id" === $"vid", "left_anti")
+          .groupBy($"id")
+          .agg(min($"parent").as("parent"), first($"dist").as("dist"))
+      } { (_, next) =>
+        val n = next.count()
+        unions += 1
+        visited = grow(visited, next, unions)
+        Superstep.Report(n, 0L, n.toDouble)
+      }
+      visited
     }
-    while (frontierCount > 0 && depth < maxDepth) {
-      val t0 = System.nanoTime()
-      val frontier = log.readDelta() // committed bytes of the last frontier
-      val expanded = frontier
-        .join(e, frontier("id") === e("src"))
-        .select($"dst".as("id"), $"src".as("parent"), ($"dist" + 1).as("dist"))
-      val next = expanded
-        .join(visited.select($"id".as("vid")), $"id" === $"vid", "left_anti")
-        .groupBy($"id")
-        .agg(min($"parent").as("parent"), first($"dist").as("dist"))
-      depth += 1
-      val (state, n) = log.appendDelta(depth, next, SuperstepMetric(
-        "bfs", depth, 0L, 0L, (System.nanoTime() - t0) / 1000000L, -1.0))
-      visited = state
-      frontierCount = n
-    }
-    visited
+  }
+
+  /** visited ∪ next as a lazy union of checkpointed per-level deltas: no
+    * O(visited) rewrite per superstep. The union is COLLAPSED every 32nd
+    * level: unbounded nesting makes each superstep's anti-join re-analyze
+    * an O(depth)-deep plan (O(depth²) driver work, and a Catalyst stack
+    * overflow on path-shaped graphs), so the rewrite cost is amortized to
+    * 1/32 instead of removed outright. */
+  private def grow(visited: DataFrame, next: DataFrame, level: Int): DataFrame = {
+    val all = visited.union(next)
+    if (level % 32 == 0) all.localCheckpoint(true) else all
   }
 
   /** Result of a bidirectional search: vertex-id path start..end inclusive,
@@ -137,22 +105,17 @@ object Bfs {
       start: Long,
       end: Long,
       tooBig: Long = DefaultTooBig): Option[Seq[Long]] = {
-    if (start == end) return Some(Seq(start))
-    val spark = edgesOut.sparkSession
-    import spark.implicits._
-    // cache both edge layouts once — each superstep joins a frontier
-    // against one of them (same reason as [[distances]])
-    val outPreCached = edgesOut.storageLevel !=
-      org.apache.spark.storage.StorageLevel.NONE
-    val inPreCached = edgesIn.storageLevel !=
-      org.apache.spark.storage.StorageLevel.NONE
-    val eOut = edgesOut.toDF()
-    val eIn = edgesIn.toDF()
-    if (!outPreCached) eOut.persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    if (!inPreCached) eIn.persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // cache both edge layouts for the whole search — each superstep joins
+    // a frontier against one of them (same reason as [[distances]])
+    if (start == end) Some(Seq(start))
+    else Layout.withCached(edgesOut)(eOut =>
+      Layout.withCached(edgesIn)(eIn => search(eOut, eIn, start, end, tooBig)))
+  }
 
+  private def search(eOut: DataFrame, eIn: DataFrame, start: Long, end: Long,
+      tooBig: Long): Option[Seq[Long]] = {
+    val spark = eOut.sparkSession
+    import spark.implicits._
     // visited: (id, parent, dist); parent = min-id predecessor (deterministic)
     var visF = Seq((start, -1L, 0)).toDF("id", "parent", "dist").localCheckpoint(true)
     var visB = Seq((end, -1L, 0)).toDF("id", "parent", "dist").localCheckpoint(true)
@@ -163,7 +126,7 @@ object Bfs {
     var radF = 0; var radB = 0         // completed levels per side
 
     def expand(frontier: DataFrame, frontierCount: Long, visited: DataFrame,
-        edges: DataFrame): (DataFrame, DataFrame, Long) = {
+        edges: DataFrame, level: Int): (DataFrame, DataFrame, Long) = {
       // broadcast the EXPANDED side's frontier when small (AQE would also
       // catch this, but the count is already known driver-side)
       val f = if (frontierCount < 10000) broadcast(frontier) else frontier
@@ -175,11 +138,9 @@ object Bfs {
         .agg(min($"parent").as("parent"), first($"dist").as("dist"))
         .localCheckpoint(true)
       val n = next.count()
-      // lazy union of checkpointed per-level deltas — no O(visited) rewrite
-      // per superstep (see [[distances]]; route searches are depth-bounded
-      // by the meeting condition, far below the plan-depth hazard, so no
-      // periodic collapse is needed here)
-      (next, visited.union(next), n)
+      // an unreachable target on a path-shaped graph expands one side for
+      // as many levels as the path is long: the same collapse as distances
+      (next, grow(visited, next, level), n)
     }
 
     // Meeting check per superstep: ONLY the newly-expanded frontier can
@@ -226,11 +187,11 @@ object Bfs {
       else {
         val goForward = canF && (!canB || cntF <= cntB)
         if (goForward) {
-          val (nf, nv, n) = expand(frontF, cntF, visF, eOut)
+          val (nf, nv, n) = expand(frontF, cntF, visF, eOut, radF + 1)
           frontF = nf; visF = nv; cntF = n; sizeF += n; radF += 1
           best = better(best, meetingOf(frontF, visB, frontierIsForward = true))
         } else {
-          val (nb, nv, n) = expand(frontB, cntB, visB, eIn)
+          val (nb, nv, n) = expand(frontB, cntB, visB, eIn, radB + 1)
           frontB = nb; visB = nv; cntB = n; sizeB += n; radB += 1
           best = better(best, meetingOf(frontB, visF, frontierIsForward = false))
         }
@@ -238,14 +199,11 @@ object Bfs {
       }
     }
 
-    val out = best.map { case (meetId, _, _) =>
+    best.map { case (meetId, _, _) =>
       val fChain = walk(visF, meetId)          // start..meet
       val bChain = walk(visB, meetId)          // end..meet
       fChain.reverse ++ bChain.tail            // start..meet..end
     }
-    if (!outPreCached) eOut.unpersist()
-    if (!inPreCached) eIn.unpersist()
-    out
   }
 
   /** Parent-chain walk: meet → root, returning meet..root order. Each hop is

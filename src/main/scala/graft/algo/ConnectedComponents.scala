@@ -27,45 +27,8 @@ object ConnectedComponents {
 
   case class Result(components: DataFrame, metrics: Seq[SuperstepMetric], rounds: Int)
 
-  def run(vertices: DataFrame, edges: Dataset[Edge], maxRounds: Int = 50): Result = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-
-    val verts = vertices.select(col(vertices.columns.head).as("id"))
-    val ops = new StarOps(spark)
-
-    def signature(e: DataFrame): (Long, Long) = {
-      e.agg(count(lit(1)),
-          coalesce(expr("bit_xor(xxhash64(u, v))"), lit(0L)))
-        .as[(Long, Long)].head()
-    }
-
-    var cur = edges.toDF().select($"src".as("u"), $"dst".as("v"))
-      .filter($"u" =!= $"v").distinct().localCheckpoint(true)
-    var sig = signature(cur)
-    var rounds = 0
-    var converged = false
-    val metrics = scala.collection.mutable.ArrayBuffer[SuperstepMetric]()
-    while (!converged && rounds < maxRounds) {
-      val t0 = System.nanoTime()
-      val next = ops.smallStar(ops.largeStar(cur)).localCheckpoint(true)
-      val nextSig = signature(next)
-      converged = nextSig == sig
-      cur = next
-      sig = nextSig
-      rounds += 1
-      metrics += SuperstepMetric("cc", rounds, sig._1, sig._1,
-        (System.nanoTime() - t0) / 1000000L, if (converged) 0.0 else 1.0)
-    }
-
-    // stars: every non-root points at its component min; roots + isolated
-    // vertices map to themselves
-    val comp = verts
-      .join(cur.select($"u".as("id"), $"v".as("comp")), Seq("id"), "left")
-      .groupBy($"id")
-      .agg(coalesce(min($"comp"), first($"id")).as("component"))
-    Result(comp, metrics.toSeq, rounds)
-  }
+  def run(vertices: DataFrame, edges: Dataset[Edge], maxRounds: Int = 50): Result =
+    iterate("cc", vertices, edgePairs(edges), maxRounds, None)
 
   /**
    * Warm-start over a GROWN graph: previous component labels + only the
@@ -93,93 +56,60 @@ object ConnectedComponents {
    */
   def warmStart(vertices: DataFrame, deltaEdges: Dataset[Edge],
       prevComponents: DataFrame, maxRounds: Int = 50): Result = {
-    val spark = deltaEdges.sparkSession
-    import spark.implicits._
-    val verts = vertices.select(col(vertices.columns.head).as("id"))
-    val ops = new StarOps(spark)
-
-    def signature(e: DataFrame): (Long, Long) =
-      e.agg(count(lit(1)),
-          coalesce(expr("bit_xor(xxhash64(u, v))"), lit(0L)))
-        .as[(Long, Long)].head()
-
     val stars = prevComponents
-      .select(col(prevComponents.columns.head).cast("long").as("u"),
-        col(prevComponents.columns(1)).cast("long").as("v"))
-    var cur = stars
-      .union(deltaEdges.toDF().select($"src".as("u"), $"dst".as("v")))
-      .filter($"u" =!= $"v").distinct().localCheckpoint(true)
-    var sig = signature(cur)
-    var rounds = 0
-    var converged = false
-    val metrics = scala.collection.mutable.ArrayBuffer[SuperstepMetric]()
-    while (!converged && rounds < maxRounds) {
-      val t0 = System.nanoTime()
-      val next = ops.smallStar(ops.largeStar(cur)).localCheckpoint(true)
-      val nextSig = signature(next)
-      converged = nextSig == sig
-      cur = next
-      sig = nextSig
-      rounds += 1
-      metrics += SuperstepMetric("cc-warm", rounds, sig._1, sig._1,
-        (System.nanoTime() - t0) / 1000000L, if (converged) 0.0 else 1.0)
-    }
-    val comp = verts
-      .join(cur.select($"u".as("id"), $"v".as("comp")), Seq("id"), "left")
-      .groupBy($"id")
-      .agg(coalesce(min($"comp"), first($"id")).as("component"))
-    Result(comp, metrics.toSeq, rounds)
+      .select(col(prevComponents.columns.head).cast("long").as("src"),
+        col(prevComponents.columns(1)).cast("long").as("dst"))
+    iterate("cc-warm", vertices,
+      edgePairs(stars.union(deltaEdges.toDF())), maxRounds, None)
   }
 
   /**
    * Resumable variant: each round's evolving edge set is committed through
-   * [[graft.state.Supersteps]] (snapshot properties carry the fixed-point
-   * signature), so a killed job resumes at the last committed round and the
-   * final components are byte-identical to an uninterrupted run.
+   * [[graft.state.Supersteps]] (the lineage carries the fixed-point flag),
+   * so a killed job resumes at the last committed round and the final
+   * components are byte-identical to an uninterrupted run.
    */
   def runResumable(vertices: DataFrame, edges: Dataset[Edge],
-      log: graft.state.Supersteps, maxRounds: Int = 50): Result = {
-    val spark = edges.sparkSession
+      log: graft.state.Supersteps, maxRounds: Int = 50): Result =
+    iterate("cc", vertices, edgePairs(edges), maxRounds, Some(log))
+
+  /** The initial edge set: (u, v) pairs, self-loops dropped, deduplicated. */
+  private def edgePairs(edges: Dataset[_]): DataFrame =
+    edges.toDF().select(col("src").as("u"), col("dst").as("v"))
+      .filter(col("u") =!= col("v")).distinct()
+
+  /** The one large/small-star loop: rounds until the edge multiset reaches
+    * a fixed point (count + xor-of-hashes signature unchanged), then the
+    * star forest read off as components. */
+  private def iterate(algo: String, vertices: DataFrame, initEdges: DataFrame,
+      maxRounds: Int, log: Option[graft.state.Supersteps]): Result = {
+    val spark = vertices.sparkSession
     import spark.implicits._
-    val verts = vertices.select(col(vertices.columns.head).as("id"))
-
-    def signature(e: DataFrame): (Long, Long) =
-      e.agg(count(lit(1)),
-          coalesce(expr("bit_xor(xxhash64(u, v))"), lit(0L)))
-        .as[(Long, Long)].head()
-
-    var rounds = log.lastCompleted.getOrElse(-1)
-    var cur =
-      if (rounds < 0) {
-        val init = edges.toDF().select($"src".as("u"), $"dst".as("v"))
-          .filter($"u" =!= $"v").distinct()
-        rounds = 0
-        log.commit(0, init, SuperstepMetric("cc", 0, 0L, 0L, 0L, 1.0))
-      } else log.readState()
-    var sig = signature(cur)
-    var converged = log.lineage.lastOption.exists(_("delta") == "0.0")
-    val metrics = scala.collection.mutable.ArrayBuffer[SuperstepMetric]()
     val ops = new StarOps(spark)
-    while (!converged && rounds < maxRounds) {
-      val t0 = System.nanoTime()
-      val next = ops.smallStar(ops.largeStar(cur))
-      val nextSig = signature(next)
-      converged = nextSig == sig
-      sig = nextSig
-      rounds += 1
-      val m = SuperstepMetric("cc", rounds, sig._1, sig._1,
-        (System.nanoTime() - t0) / 1000000L, if (converged) 0.0 else 1.0)
-      cur = log.commit(rounds, next, m)
-      metrics += m
+    def signature(e: DataFrame): (Long, Long) =
+      e.agg(count(lit(1)), coalesce(expr("bit_xor(xxhash64(u, v))"), lit(0L)))
+        .as[(Long, Long)].head()
+    // the previous round's signature, carried so each round signs only its
+    // own output
+    var sig: Option[(Long, Long)] = None
+    val run = Superstep.iterate(algo, Superstep.sink(log), maxRounds)(initEdges) {
+      (cur, _) => ops.smallStar(ops.largeStar(cur))
+    } { (prev, next) =>
+      val before = sig.getOrElse(signature(prev))
+      val after = signature(next)
+      sig = Some(after)
+      Superstep.Report(after._1, after._1, if (after == before) 0.0 else 1.0)
     }
-    val comp = verts
-      .join(cur.select($"u".as("id"), $"v".as("comp")), Seq("id"), "left")
+    // stars: every non-root points at its component min; roots + isolated
+    // vertices map to themselves
+    val comp = vertices.select(col(vertices.columns.head).as("id"))
+      .join(run.state.select($"u".as("id"), $"v".as("comp")), Seq("id"), "left")
       .groupBy($"id")
       .agg(coalesce(min($"comp"), first($"id")).as("component"))
-    Result(comp, metrics.toSeq, rounds)
+    Result(comp, run.metrics, run.steps)
   }
 
-  /** Star operations shared by run/runResumable. */
+  /** The large-star and small-star operations of one round. */
   private[algo] class StarOps(spark: org.apache.spark.sql.SparkSession) {
     import spark.implicits._
 

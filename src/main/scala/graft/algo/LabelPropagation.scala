@@ -26,24 +26,28 @@ object LabelPropagation {
 
   case class Result(labels: DataFrame, metrics: Seq[SuperstepMetric], iterations: Int)
 
-  def run(vertices: DataFrame, edges: Dataset[Edge], maxIter: Int = 10): Result = {
+  def run(vertices: DataFrame, edges: Dataset[Edge], maxIter: Int = 10): Result =
+    iterate(vertices, edges, maxIter, None)
+
+  /** Resumable variant: labels committed per superstep via
+    * [[graft.state.Supersteps]]; resumes at the last committed superstep. */
+  def runResumable(vertices: DataFrame, edges: Dataset[Edge],
+      log: graft.state.Supersteps, maxIter: Int = 10): Result =
+    iterate(vertices, edges, maxIter, Some(log))
+
+  private def iterate(vertices: DataFrame, edges: Dataset[Edge], maxIter: Int,
+      log: Option[graft.state.Supersteps]): Result = {
     val spark = edges.sparkSession
     import spark.implicits._
-
     val verts = vertices.select(col(vertices.columns.head).as("id"))
     val sym = edges.toDF()
       .select($"src".as("u"), $"dst".as("v"))
       .union(edges.select($"dst".as("u"), $"src".as("v")))
       .filter($"u" =!= $"v").distinct()
       .localCheckpoint(true)
-
-    var labels = verts.withColumn("label", $"id").localCheckpoint(true)
-    val metrics = scala.collection.mutable.ArrayBuffer[SuperstepMetric]()
-    var iter = 0
-    var changed = Long.MaxValue
     val edgeCount = sym.count()
-    while (iter < maxIter && changed > 0) {
-      val t0 = System.nanoTime()
+    val run = Superstep.iterate("lpa", Superstep.sink(log), maxIter)(
+        verts.withColumn("label", $"id")) { (labels, _) =>
       val nbrLabels = sym.join(labels, sym("v") === labels("id"))
         .select($"u", $"label")
       val freq = nbrLabels.groupBy($"u", $"label").agg(count(lit(1)).as("c"))
@@ -51,63 +55,14 @@ object LabelPropagation {
       val chosen = freq.groupBy($"u")
         .agg(max(struct($"c", (-$"label").as("nl"))).as("top"))
         .select($"u".as("id"), (-$"top.nl").as("newLabel"))
-      val next = labels.join(chosen, Seq("id"), "left")
+      labels.join(chosen, Seq("id"), "left")
         .select($"id", coalesce($"newLabel", $"label").as("label"))
-        .localCheckpoint(true)
-      changed = next.join(labels.withColumnRenamed("label", "old"), "id")
+    } { (prev, next) =>
+      val changed = next.join(prev.withColumnRenamed("label", "old"), "id")
         .filter($"label" =!= $"old").count()
-      labels = next
-      iter += 1
-      metrics += SuperstepMetric("lpa", iter, changed, edgeCount,
-        (System.nanoTime() - t0) / 1000000L, changed.toDouble)
+      Superstep.Report(changed, edgeCount, changed.toDouble)
     }
-    Result(labels, metrics.toSeq, iter)
-  }
-
-  /** Resumable variant: labels committed per superstep via
-    * [[graft.state.Supersteps]]; resumes at the last committed superstep. */
-  def runResumable(vertices: DataFrame, edges: Dataset[Edge],
-      log: graft.state.Supersteps, maxIter: Int = 10): Result = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val verts = vertices.select(col(vertices.columns.head).as("id"))
-    val sym = edges.toDF()
-      .select($"src".as("u"), $"dst".as("v"))
-      .union(edges.select($"dst".as("u"), $"src".as("v")))
-      .filter($"u" =!= $"v").distinct()
-      .localCheckpoint(true)
-    val edgeCount = sym.count()
-
-    var iter = log.lastCompleted.getOrElse(-1)
-    var labels =
-      if (iter < 0) {
-        iter = 0
-        log.commit(0, verts.withColumn("label", $"id"),
-          SuperstepMetric("lpa", 0, 0L, edgeCount, 0L, -1.0))
-      } else log.readState()
-    var changed = log.lineage.lastOption
-      .map(_("delta").toDouble.toLong).filter(_ >= 0).getOrElse(Long.MaxValue)
-    val metrics = scala.collection.mutable.ArrayBuffer[SuperstepMetric]()
-    while (iter < maxIter && changed != 0) {
-      val t0 = System.nanoTime()
-      val nbrLabels = sym.join(labels, sym("v") === labels("id"))
-        .select($"u", $"label")
-      val freq = nbrLabels.groupBy($"u", $"label").agg(count(lit(1)).as("c"))
-      val chosen = freq.groupBy($"u")
-        .agg(max(struct($"c", (-$"label").as("nl"))).as("top"))
-        .select($"u".as("id"), (-$"top.nl").as("newLabel"))
-      val next = labels.join(chosen, Seq("id"), "left")
-        .select($"id", coalesce($"newLabel", $"label").as("label"))
-        .localCheckpoint(true)
-      changed = next.join(labels.withColumnRenamed("label", "old"), "id")
-        .filter($"label" =!= $"old").count()
-      iter += 1
-      val m = SuperstepMetric("lpa", iter, changed, edgeCount,
-        (System.nanoTime() - t0) / 1000000L, changed.toDouble)
-      labels = log.commit(iter, next, m)
-      metrics += m
-    }
-    Result(labels, metrics.toSeq, iter)
+    Result(run.state, run.metrics, run.steps)
   }
 
   /** Driver oracle: the identical convention, dense. */

@@ -1,5 +1,8 @@
 package graft.algo
 
+import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.storage.StorageLevel
+
 /** Shared physical-layout policy for the iterative operators' cached edge
   * layouts. */
 object Layout {
@@ -16,4 +19,17 @@ object Layout {
     * count already — every operator counts its cached input first. */
   def edgePartitions(edgeRows: Long): Int =
     math.max(1, math.ceil(edgeRows.toDouble / EdgeRowsPerPartition).toInt)
+
+  /** Runs `body` over `edges` cached for exactly the body's duration: each
+    * consumer of the edge lineage inside it (counts, layout repartitions,
+    * anti-joins, and — via CacheManager subplan substitution — caller-side
+    * vertex frames derived from the same edge plan) then reads the cache
+    * instead of re-running the full upstream scan. A caller-cached input is
+    * used as is and left cached. */
+  def withCached[T](edges: Dataset[_])(body: DataFrame => T): T = {
+    val preCached = edges.storageLevel != StorageLevel.NONE
+    val e = edges.toDF()
+    if (!preCached) e.persist(StorageLevel.MEMORY_AND_DISK)
+    try body(e) finally if (!preCached) e.unpersist()
+  }
 }

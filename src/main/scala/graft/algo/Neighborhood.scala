@@ -56,21 +56,19 @@ object Neighborhood {
     val spark = edges.sparkSession
     import spark.implicits._
     require(maxT >= 0, s"maxT must be >= 0, got $maxT")
-    val preCached = edges.storageLevel != StorageLevel.NONE
-    val e0 = edges.toDF()
-    if (!preCached) e0.persist(StorageLevel.MEMORY_AND_DISK)
-    val verts = vertices.select(col(vertices.columns.head).as("id"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val n = verts.count()
-    // src layout: with the (small) ball state broadcast, the gather join
-    // streams the cached edge partitions and the partial set_union combines
-    // per-src WITHIN each task, so the per-superstep shuffle carries one
-    // partially-deduped set per (task, src) — never the raw m×ball rows
-    val m = e0.count()
-    val edgesBySrc = e0.repartition(Layout.edgePartitions(m), $"src")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    edgesBySrc.count()
-    if (!preCached) e0.unpersist()
+    val (verts, n, edgesBySrc) = Layout.withCached(edges) { e0 =>
+      val verts = vertices.select(col(vertices.columns.head).as("id"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      // src layout: with the (small) ball state broadcast, the gather join
+      // streams the cached edge partitions and the partial set_union
+      // combines per-src WITHIN each task, so the per-superstep shuffle
+      // carries one partially-deduped set per (task, src) — never the raw
+      // m×ball rows
+      val edgesBySrc = e0.repartition(Layout.edgePartitions(e0.count()), $"src")
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      edgesBySrc.count()
+      (verts, verts.count(), edgesBySrc)
+    }
 
     var state = verts
       .select($"id", array($"id".cast("long")).as("ball"))
@@ -186,17 +184,16 @@ object Neighborhood {
     require(log2m >= 4 && log2m <= 12, s"log2m must be in [4,12], got $log2m")
     val m = 1 << log2m
 
-    val preCached = edges.storageLevel != StorageLevel.NONE
-    val e0 = edges.toDF()
-    if (!preCached) e0.persist(StorageLevel.MEMORY_AND_DISK)
-    val m2 = e0.count()
-    val verts = vertices.select(col(vertices.columns.head).as("id"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val n = verts.count()
-    val edgesByDst = e0.repartition(Layout.edgePartitions(m2), $"dst")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    edgesByDst.count()
-    if (!preCached) e0.unpersist()
+    val (verts, n, edgesByDst) = Layout.withCached(edges) { e0 =>
+      val m2 = e0.count()
+      val verts = vertices.select(col(vertices.columns.head).as("id"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      val n = verts.count()
+      val edgesByDst = e0.repartition(Layout.edgePartitions(m2), $"dst")
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      edgesByDst.count()
+      (verts, n, edgesByDst)
+    }
 
     // one-element sketch per vertex: slot = hash mod m, register =
     // trailing-zero count of the remaining hash bits + 1 (the same

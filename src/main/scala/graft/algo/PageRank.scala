@@ -1,20 +1,10 @@
 package graft.algo
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
 import graft.graph.Edge
-
-/** Per-superstep execution record — the lineage/metrics row the north rule
-  * requires for every iteration (persisted via [[graft.state.Supersteps]]). */
-case class SuperstepMetric(
-    algo: String,
-    superstep: Int,
-    rowsOut: Long,
-    edgesProcessed: Long,
-    wallMs: Long,
-    delta: Double)
 
 /**
  * PageRank over the canonical edge table — Dataset/Catalyst only.
@@ -29,15 +19,21 @@ case class SuperstepMetric(
  * skew-split as backstop; hub out-degree fans out map-side) and one partial
  * + final hash aggregation by `dst` (map-side combine absorbs hub in-degree
  * skew). The edges⋈outdeg weight join happens ONCE before the loop.
- * Superstep state is localCheckpoint-ed (plan depth O(1)); the resumable
- * variant writes state tables through Supersteps instead.
+ *
+ * Every entry point below runs the same setup, superstep plan and
+ * [[Superstep]] loop: [[personalized]] differs only in its teleport mask,
+ * [[warmStart]] in its seed, [[runResumable]] in committing each superstep.
+ *
+ * Contract for every entry point: `vertices` is a single-column `id` frame
+ * holding every vertex (incl. isolated ones) and EVERY edge endpoint — it
+ * is not checked (that would cost a join per call); an endpoint outside it
+ * leaks rank mass, so ranks stop summing to 1.
  */
 object PageRank {
 
   case class Result(ranks: DataFrame, metrics: Seq[SuperstepMetric], iterations: Int)
 
   /**
-   * @param vertices single-column `id` DataFrame (every vertex, incl. isolated)
    * @param tol      max per-vertex |Δrank| convergence threshold; 0 ⇒ run
    *                 exactly `maxIter` supersteps
    */
@@ -47,7 +43,7 @@ object PageRank {
       damping: Double = 0.85,
       tol: Double = 1e-9,
       maxIter: Int = 100): Result =
-    runFrom(vertices, edges, None, damping, tol, maxIter)
+    iterate(vertices, edges, damping, tol, maxIter)
 
   /**
    * Warm-start PageRank: iterate to `tol` from a PRIOR rank vector instead
@@ -75,7 +71,7 @@ object PageRank {
       damping: Double = 0.85,
       tol: Double = 1e-9,
       maxIter: Int = 100): Result =
-    runFrom(vertices, edges, Some(prevRanks), damping, tol, maxIter)
+    iterate(vertices, edges, damping, tol, maxIter, prevRanks = Some(prevRanks))
 
   /**
    * Personalized PageRank (random walk with restart): the teleport mass —
@@ -105,83 +101,24 @@ object PageRank {
       sources: Seq[Long],
       damping: Double = 0.85,
       maxIter: Int = 10): Result = {
-    val spark = edges.sparkSession
-    import spark.implicits._
     require(sources.nonEmpty, "personalized PageRank needs >= 1 source id")
-    val srcIds = sources.distinct
-    val s = srcIds.size.toDouble
-
-    // cache the raw edge input once — see [[runFrom]]'s note (same four
-    // consumers of the edge lineage, same CacheManager substitution win)
-    val preCached = edges.storageLevel != StorageLevel.NONE
-    val e0 = edges.toDF()
-    if (!preCached) e0.persist(StorageLevel.MEMORY_AND_DISK)
-    val edgeCount = e0.count()
-    val verts = vertices.select(col(vertices.columns.head).as("id"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val n = verts.count()
-    require(n > 0, "empty vertex set")
-    val present = verts.filter($"id".isin(srcIds.map(lit(_)): _*)).count()
-    require(present == srcIds.size,
-      s"${srcIds.size - present} source id(s) not in the vertex set")
-    val isSrc = col("id").isin(srcIds.map(lit(_)): _*)
-
-    val outDeg = e0.groupBy($"src").agg(count(lit(1)).as("deg"))
-    val edgesW = e0.join(outDeg, "src")
-      .select($"src", $"dst", (lit(1.0) / $"deg").as("w"))
-      .repartition(Layout.edgePartitions(edgeCount), $"src")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    edgesW.count()
-    val dangling = verts.join(e0.select($"src".as("id")).distinct(),
-      Seq("id"), "left_anti").persist(StorageLevel.MEMORY_AND_DISK)
-    val danglingCount = dangling.count()
-    // fixed no-in-edge set: replaces the per-superstep verts⋈contribs left
-    // join with a union, exactly as in [[runFrom]]
-    val noIn = verts.join(e0.select($"dst".as("id")).distinct(),
-      Seq("id"), "left_anti").localCheckpoint(true)
-    if (!preCached) e0.unpersist()
-
-    var ranks = verts
-      .select($"id", when(isSrc, lit(1.0 / s)).otherwise(lit(0.0)).as("rank"))
-      .localCheckpoint(true)
-    val metrics = scala.collection.mutable.ArrayBuffer[SuperstepMetric]()
-    var iter = 0
-    while (iter < maxIter) {
-      val t0 = System.nanoTime()
-      val contribs = ranks.join(edgesW, ranks("id") === edgesW("src"))
-        .groupBy($"dst".as("id"))
-        .agg(sum($"rank" * $"w").as("contrib"))
-      // teleport base per row: CASE isSrc THEN (1-d)/|S| + (d*dm)/|S| ELSE 0,
-      // with the dangling mass dm as a broadcast 1-row scalar folded into
-      // the superstep's own action (same bit-identical-arithmetic argument
-      // as [[runFrom]]; a no-in-edge vertex's d*0.0 term adds exact +0.0)
-      val newRanks = (if (danglingCount == 0) {
-        val srcBase = (1.0 - damping) / s
-        contribs.select($"id",
-            (when(isSrc, lit(srcBase)).otherwise(lit(0.0))
-              + lit(damping) * $"contrib").as("rank"))
-          .union(noIn.select($"id",
-            when(isSrc, lit(srcBase)).otherwise(lit(0.0)).as("rank")))
-      } else {
-        val dm = broadcast(ranks.join(dangling, "id")
-          .agg(coalesce(sum($"rank"), lit(0.0)).as("dm")))
-        val srcBase = lit((1.0 - damping) / s) +
-          lit(damping) * $"dm" / lit(s)
-        contribs.crossJoin(dm)
-          .select($"id",
-            (when(isSrc, srcBase).otherwise(lit(0.0))
-              + lit(damping) * $"contrib").as("rank"))
-          .union(noIn.crossJoin(dm).select($"id",
-            when(isSrc, srcBase).otherwise(lit(0.0)).as("rank")))
-      }).localCheckpoint(true)
-      ranks = newRanks
-      iter += 1
-      metrics += SuperstepMetric("ppr", iter, n, edgeCount,
-        (System.nanoTime() - t0) / 1000000L, -1.0)
-    }
-    edgesW.unpersist(); dangling.unpersist(); verts.unpersist()
-    Result(ranks, metrics.toSeq, iter)
+    iterate(vertices, edges, damping, 0.0, maxIter, sources = sources.distinct)
   }
+
+  /**
+   * Resumable fixed-iteration PageRank: every superstep's ranks are committed
+   * through [[graft.state.Supersteps]]; on start the loop continues from the
+   * last committed superstep (kill the JVM at any point, re-run, get the
+   * byte-identical final state — each superstep consumes the COMMITTED bytes
+   * of the previous one, so the recomputation is exact).
+   */
+  def runResumable(
+      vertices: DataFrame,
+      edges: Dataset[Edge],
+      log: graft.state.Supersteps,
+      damping: Double = 0.85,
+      maxIter: Int = 10): Result =
+    iterate(vertices, edges, damping, 0.0, maxIter, log = Some(log))
 
   /** Carry a rank vector across a RE-CONVERTED warehouse: dense ids are the
     * sorted-url rank, so any change to the url set renumbers them — map old
@@ -198,15 +135,24 @@ object PageRank {
       .select($"id", $"rank")
   }
 
-  /** One superstep's LAZY plan (the loop body of [[runFrom]], exposed as a
-    * seam for the plan audit): one hash join ranks⋈edgesW (edge side
-    * pre-partitioned, never reshuffled), one partial/final aggregation by
-    * dst, the dangling mass as a broadcast 1-row scalar folded into the
-    * same plan, and the fixed no-in-edge rows UNIONED in — no per-superstep
-    * verts⋈contribs Exchange. */
+  /** One uniform-teleport superstep's LAZY plan (exposed as a seam for the
+    * plan audit): one hash join ranks⋈edgesW (edge side pre-partitioned,
+    * never reshuffled), one partial/final aggregation by dst, the dangling
+    * mass as a broadcast 1-row scalar folded into the same plan, and the
+    * fixed no-in-edge rows UNIONED in — no per-superstep verts⋈contribs
+    * Exchange. */
   private[graft] def superstepPlan(ranks: DataFrame, edgesW: DataFrame,
       noIn: DataFrame, dangling: DataFrame, danglingCount: Long,
-      damping: Double, n: Long): DataFrame = {
+      damping: Double, n: Long): DataFrame =
+    stepPlan(ranks, edgesW, noIn, dangling, danglingCount, damping, n.toDouble, identity)
+
+  /** [[superstepPlan]] with the teleport split out: `teleport` masks the
+    * per-vertex teleport base (identity for uniform PageRank, zero outside
+    * the source set for [[personalized]]) and `size` is the teleport set's
+    * size (n, or |S|). */
+  private def stepPlan(ranks: DataFrame, edgesW: DataFrame,
+      noIn: DataFrame, dangling: DataFrame, danglingCount: Long,
+      damping: Double, size: Double, teleport: Column => Column): DataFrame = {
     val spark = ranks.sparkSession
     import spark.implicits._
     val contribs = ranks.join(edgesW, ranks("id") === edgesW("src"))
@@ -214,74 +160,84 @@ object PageRank {
       .agg(sum($"rank" * $"w").as("contrib"))
     // dangling mass folds into the superstep's own action as a broadcast
     // 1-row scalar instead of a separate driver round-trip per superstep;
-    // the expression tree mirrors the old driver arithmetic exactly
-    // ((1-d)/n + (d*dm)/n, then base + d*contrib — a no-in-edge vertex's
-    // d*0.0 contribution adds exact +0.0), so ranks are bit-identical to
-    // the two-action / verts-left-join formulation
+    // the expression tree keeps [[oracle]]'s arithmetic order ((1-d)/n +
+    // (d*dm)/n, then base + d*contrib — a no-in-edge vertex's d*0.0
+    // contribution adds exact +0.0), so no rounding step is reordered
     if (danglingCount == 0) {
-      val base = (1.0 - damping) / n
-      contribs.select($"id", (lit(base) + lit(damping) * $"contrib").as("rank"))
-        .union(noIn.select($"id", lit(base).as("rank")))
+      val base = teleport(lit((1.0 - damping) / size))
+      contribs.select($"id", (base + lit(damping) * $"contrib").as("rank"))
+        .union(noIn.select($"id", base.as("rank")))
     } else {
       val dm = broadcast(ranks.join(dangling, "id")
         .agg(coalesce(sum($"rank"), lit(0.0)).as("dm")))
-      val baseCol = lit((1.0 - damping) / n) +
-        lit(damping) * $"dm" / lit(n.toDouble)
+      val base = teleport(lit((1.0 - damping) / size) +
+        lit(damping) * $"dm" / lit(size))
       contribs.crossJoin(dm)
-        .select($"id", (baseCol + lit(damping) * $"contrib").as("rank"))
-        .union(noIn.crossJoin(dm).select($"id", baseCol.as("rank")))
+        .select($"id", (base + lit(damping) * $"contrib").as("rank"))
+        .union(noIn.crossJoin(dm).select($"id", base.as("rank")))
     }
   }
 
-  private def runFrom(
+  /** The one PageRank body behind every entry point: uniform teleport, or
+    * teleport to `sources` when non-empty; uniform start, or the
+    * renormalized `prevRanks` seed; in-session, or committed to `log`. */
+  private def iterate(
       vertices: DataFrame,
       edges: Dataset[Edge],
-      prevRanks: Option[DataFrame],
       damping: Double,
       tol: Double,
-      maxIter: Int): Result = {
+      maxIter: Int,
+      sources: Seq[Long] = Nil,
+      prevRanks: Option[DataFrame] = None,
+      log: Option[graft.state.Supersteps] = None): Result = {
     val spark = edges.sparkSession
     import spark.implicits._
+    val isSrc = col("id").isin(sources.map(lit(_)): _*)
 
-    // cache the raw edge input ONCE before anything reads it: the setup
-    // below consumes the edge lineage four times (count, weight join,
-    // distinct-src anti-join, and — via CacheManager subplan substitution —
-    // any caller-side vertex frame derived from the same edge plan), and
-    // without this each consumer re-ran the full upstream scan+distinct
-    val preCached = edges.storageLevel != StorageLevel.NONE
-    val e0 = edges.toDF()
-    if (!preCached) e0.persist(StorageLevel.MEMORY_AND_DISK)
-    val edgeCount = e0.count()
-    val verts = vertices.select(col(vertices.columns.head).as("id"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val n = verts.count()
-    require(n > 0, "empty vertex set")
+    // the setup consumes the edge lineage four times (count, weight join,
+    // two distinct-endpoint anti-joins) plus any caller-side vertex frame
+    // derived from the same edge plan: all read the cached input
+    val (verts, n, edgeCount, edgesW, dangling, danglingCount, noIn) =
+      Layout.withCached(edges) { e0 =>
+        val edgeCount = e0.count()
+        val verts = vertices.select(col(vertices.columns.head).as("id"))
+          .persist(StorageLevel.MEMORY_AND_DISK)
+        val n = verts.count()
+        require(n > 0, "empty vertex set")
+        if (sources.nonEmpty) {
+          val present = verts.filter(isSrc).count()
+          require(present == sources.size,
+            s"${sources.size - present} source id(s) not in the vertex set")
+        }
+        // per-source weight = 1/outdeg, attached to each edge; pre-
+        // partitioned by src so the per-superstep join only shuffles the
+        // (n-row) rank side, never the (m-row) edge side
+        val outDeg = e0.groupBy($"src").agg(count(lit(1)).as("deg"))
+        val edgesW = e0.join(outDeg, "src")
+          .select($"src", $"dst", (lit(1.0) / $"deg").as("w"))
+          .repartition(Layout.edgePartitions(edgeCount), $"src")
+          .persist(StorageLevel.MEMORY_AND_DISK)
+        edgesW.count()
+        // dangling vertices: no out-edges; their mass is redistributed by
+        // the teleport. On graphs with none (common after dangling-link
+        // elimination) the whole per-superstep mass term is skipped.
+        val dangling = verts.join(e0.select($"src".as("id")).distinct(),
+          Seq("id"), "left_anti").persist(StorageLevel.MEMORY_AND_DISK)
+        val danglingCount = dangling.count()
+        // vertices with NO in-edges never appear in the contribution
+        // aggregate; the set is FIXED across supersteps, so computing it
+        // once replaces the per-superstep verts⋈contribs left join (an
+        // n-row Exchange + sort per superstep, guide §2.4) with a union
+        val noIn = verts.join(e0.select($"dst".as("id")).distinct(),
+          Seq("id"), "left_anti").localCheckpoint(true)
+        (verts, n, edgeCount, edgesW, dangling, danglingCount, noIn)
+      }
 
-    // one-time: per-source weight = 1/outdeg, attached to each edge;
-    // pre-partitioned by src so the per-superstep join only shuffles the
-    // (n-row) rank side, never the (m-row) edge side
-    val outDeg = e0.groupBy($"src").agg(count(lit(1)).as("deg"))
-    val edgesW = e0.join(outDeg, "src")
-      .select($"src", $"dst", (lit(1.0) / $"deg").as("w"))
-      .repartition(Layout.edgePartitions(edgeCount), $"src")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    edgesW.count()
-    // dangling vertices: no out-edges; their mass redistributes uniformly.
-    // On graphs with none (common after dangling-link elimination) the whole
-    // per-superstep mass term is skipped.
-    val dangling = verts.join(e0.select($"src".as("id")).distinct(),
-      Seq("id"), "left_anti").persist(StorageLevel.MEMORY_AND_DISK)
-    val danglingCount = dangling.count()
-    // vertices with NO in-edges never appear in the contribution aggregate;
-    // the set is FIXED across supersteps, so computing it once replaces the
-    // per-superstep verts⋈contribs left join (an n-row Exchange + sort per
-    // superstep, guide §2.4) with a plain union of this frame
-    val noIn = verts.join(e0.select($"dst".as("id")).distinct(),
-      Seq("id"), "left_anti").localCheckpoint(true)
-    if (!preCached) e0.unpersist()
-
-    var ranks = (prevRanks match {
-      case None => verts.withColumn("rank", lit(1.0 / n))
+    val size = if (sources.isEmpty) n.toDouble else sources.size.toDouble
+    val teleport: Column => Column =
+      if (sources.isEmpty) identity else c => when(isSrc, c).otherwise(lit(0.0))
+    def init = prevRanks match {
+      case None => verts.select($"id", teleport(lit(1.0 / size)).as("rank"))
       case Some(prev) =>
         // seed = prior ranks restricted to the current vertex set, new
         // vertices at 1/n, renormalized to a probability distribution
@@ -291,96 +247,23 @@ object PageRank {
           .localCheckpoint(true)
         val total = seeded.agg(sum($"rank")).as[Double].head()
         seeded.select($"id", ($"rank" / total).as("rank"))
-    }).localCheckpoint(true)
-    val metrics = scala.collection.mutable.ArrayBuffer[SuperstepMetric]()
-    var iter = 0
-    var delta = Double.MaxValue
-    while (iter < maxIter && (tol <= 0.0 || delta > tol)) {
-      val t0 = System.nanoTime()
+    }
+    val run = Superstep.iterate(if (sources.isEmpty) "pagerank" else "ppr",
+        Superstep.sink(log), maxIter, tol)(init) { (ranks, _) =>
       // one action per superstep: see [[superstepPlan]]
-      val newRanks = superstepPlan(ranks, edgesW, noIn, dangling,
-        danglingCount, damping, n).localCheckpoint(true)
-      delta =
+      stepPlan(ranks, edgesW, noIn, dangling, danglingCount, damping, size, teleport)
+    } { (prev, next) =>
+      val delta =
         if (tol > 0.0)
-          newRanks.join(ranks.withColumnRenamed("rank", "old"), "id")
+          next.join(prev.withColumnRenamed("rank", "old"), "id")
             .agg(max(abs($"rank" - $"old"))).as[Double].head()
-        else Double.MaxValue
-      ranks = newRanks
-      iter += 1
-      metrics += SuperstepMetric("pagerank", iter, n, edgeCount,
-        (System.nanoTime() - t0) / 1000000L, if (tol > 0.0) delta else -1.0)
+        else -1.0
+      Superstep.Report(n, edgeCount, delta)
     }
-    // release loop-scoped caches (ranks is localCheckpoint-ed, independent);
+    // release loop-scoped caches (ranks is checkpointed or committed);
     // leaked caches otherwise evict-churn the NEXT job's working set
-    edgesW.unpersist()
-    dangling.unpersist()
-    verts.unpersist()
-    Result(ranks, metrics.toSeq, iter)
-  }
-
-  /**
-   * Resumable fixed-iteration PageRank: every superstep's ranks are committed
-   * through [[graft.state.Supersteps]]; on start the loop continues from the
-   * last committed superstep (kill the JVM at any point, re-run, get the
-   * byte-identical final state — each superstep consumes the COMMITTED bytes
-   * of the previous one, so the recomputation is exact).
-   */
-  def runResumable(
-      vertices: DataFrame,
-      edges: Dataset[Edge],
-      log: graft.state.Supersteps,
-      damping: Double = 0.85,
-      maxIter: Int = 10): Result = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val verts = vertices.select(col(vertices.columns.head).as("id"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val n = verts.count()
-    val edgeCount = edges.count()
-    // same physical shape as [[run]]: weight join hoisted out of the loop,
-    // edges pre-partitioned by src so supersteps shuffle only the rank side
-    val outDeg = edges.groupBy($"src").agg(count(lit(1)).as("deg"))
-    val edgesW = edges.join(outDeg, "src")
-      .select($"src", $"dst", (lit(1.0) / $"deg").as("w"))
-      .repartition($"src")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    edgesW.count()
-    val dangling = verts.join(edges.select($"src".as("id")).distinct(),
-      Seq("id"), "left_anti").persist(StorageLevel.MEMORY_AND_DISK)
-    val danglingCount = dangling.count()
-
-    var iter = log.lastCompleted.getOrElse(-1)
-    var ranks =
-      if (iter < 0) {
-        val init = verts.withColumn("rank", lit(1.0 / n))
-        iter = 0
-        log.commit(0, init, SuperstepMetric("pagerank", 0, n, 0L, 0L, -1.0))
-      } else log.readState()
-    val metrics = scala.collection.mutable.ArrayBuffer[SuperstepMetric]()
-    while (iter < maxIter) {
-      val t0 = System.nanoTime()
-      val danglingMass =
-        if (danglingCount == 0) 0.0
-        else ranks.join(dangling, "id")
-          .agg(coalesce(sum($"rank"), lit(0.0))).as[Double].head()
-      val contribs = ranks.join(edgesW, ranks("id") === edgesW("src"))
-        .groupBy($"dst".as("id"))
-        .agg(sum($"rank" * $"w").as("contrib"))
-      val base = (1.0 - damping) / n + damping * danglingMass / n
-      val newRanks = verts.join(contribs, Seq("id"), "left")
-        .select($"id",
-          (lit(base) + lit(damping) * coalesce($"contrib", lit(0.0))).as("rank"))
-      iter += 1
-      val m = SuperstepMetric("pagerank", iter, n, edgeCount,
-        (System.nanoTime() - t0) / 1000000L, -1.0)
-      ranks = log.commit(iter, newRanks, m)
-      metrics += m
-    }
-    // release loop-scoped caches (ranks reads the committed table)
-    edgesW.unpersist()
-    dangling.unpersist()
-    verts.unpersist()
-    Result(ranks, metrics.toSeq, iter)
+    edgesW.unpersist(); dangling.unpersist(); verts.unpersist()
+    Result(run.state, run.metrics, run.steps)
   }
 
   /** In-driver dense power iteration — the frozen oracle for allclose-1e-6

@@ -56,17 +56,14 @@ object RandomWalks {
     // cache the raw edge input while the src layout + the caller-derived
     // vertex frame (CacheManager subplan substitution) materialize, then
     // drop it — only the src layout is needed across steps
-    val preCached = edges.storageLevel != StorageLevel.NONE
-    val e0 = edges.toDF()
-    if (!preCached) e0.persist(StorageLevel.MEMORY_AND_DISK)
-    val m = e0.count()
-    val edgesBySrc = e0.repartition(Layout.edgePartitions(m), $"src")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    edgesBySrc.count()
-
-    var frontier = verts.select($"id".as("start"), $"id".as("cur"))
-      .localCheckpoint(true)
-    if (!preCached) e0.unpersist()
+    val (edgesBySrc, frontier0) = Layout.withCached(edges) { e0 =>
+      val edgesBySrc = e0.repartition(Layout.edgePartitions(e0.count()), $"src")
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      edgesBySrc.count()
+      (edgesBySrc, verts.select($"id".as("start"), $"id".as("cur"))
+        .localCheckpoint(true))
+    }
+    var frontier = frontier0
     // step 0 of the trace reads the CHECKPOINTED frontier rather than
     // re-deriving the vertex frame at action time
     var trace = frontier.select($"start", lit(0).as("step"),

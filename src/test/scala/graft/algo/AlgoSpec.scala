@@ -148,8 +148,8 @@ class AlgoSpec extends SparkTestBase {
     }
   }
 
-  test("HITS raw power chain (computeDelta=false) matches the oracle to 1e-9") {
-    // the production path defers every L1 normalization to the end (the
+  test("HITS raw power chain matches the oracle to 1e-9 (rescale, maxIter=1)") {
+    // the power chain defers every L1 normalization to the end (the
     // scalars cancel); it must agree with the per-step-normalized oracle to
     // float rounding, including maxIter past the every-5th rescale and the
     // maxIter=1 degenerate split
@@ -157,8 +157,7 @@ class AlgoSpec extends SparkTestBase {
         (40, 120, 33L, 12), (30, 80, 34L, 1))) {
       val edges = randomDigraph(n, m, seed)
       val (wantHub, wantAuth) = Hits.oracle(n, edges, maxIter = iters)
-      val res = Hits.run(vertsOf(n), toDs(edges), maxIter = iters,
-        computeDelta = false)
+      val res = Hits.run(vertsOf(n), toDs(edges), maxIter = iters)
       val got = res.scores.collect()
         .map(r => r.getLong(0).toInt -> (r.getDouble(1), r.getDouble(2))).toMap
       assert(got.size == n)

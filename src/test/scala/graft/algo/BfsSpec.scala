@@ -67,6 +67,20 @@ class BfsSpec extends SparkTestBase {
     }
   }
 
+  test("shortestPath on two disjoint 70-vertex paths: None across, oracle length along") {
+    import spark.implicits._
+    // each side's search walks a whole path, one level per superstep — past
+    // the 32-level visited-union collapse
+    val n = 70L
+    val edgeSeq = Seq(0L, n).flatMap(b => (b until b + n - 1).map(i => (i, i + 1)))
+    val out = spark.createDataset(edgeSeq.map(e => Edge(e._1, e._2)))
+    val in = spark.createDataset(edgeSeq.map(e => Edge(e._2, e._1)))
+    assert(Bfs.shortestPath(out, in, 0L, 2 * n - 1).isEmpty)
+    val along = Bfs.shortestPath(out, in, 0L, n - 1)
+    assert(along.map(_.length - 1).getOrElse(-1) == oracleDist(edgeSeq, 0L, n - 1))
+    assert(along.contains((0L until n).toSeq))
+  }
+
   test("deterministic results across repeated runs (tie-break fixed)") {
     import spark.implicits._
     val edgeSeq = randomDigraph(n = 50, m = 300, seed = 99)

@@ -346,6 +346,56 @@ class StateSpec extends SparkTestBase {
         .as[(Long, Long)].collect().sorted.toSeq)
   }
 
+  test("resumable PageRank equals run(tol = 0) to 1e-12 (incl. dangling)") {
+    import spark.implicits._
+    val rng = new java.util.Random(41)
+    // sources 0..79 only: vertices 80..89 are dangling
+    val edges = (0 until 400).map(_ => (rng.nextInt(80).toLong, rng.nextInt(90).toLong))
+      .filter { case (a, b) => a != b }.distinct
+    val eds = spark.createDataset(edges.map(e => Edge(e._1, e._2)))
+    val verts = spark.range(90).toDF("id")
+    val committed = PageRank.runResumable(verts, eds,
+      new Supersteps(tmp(), "pagerank", spark), maxIter = 8)
+    val mem = PageRank.run(verts, eds, tol = 0.0, maxIter = 8)
+    assert(committed.iterations == 8 && mem.iterations == 8)
+    val a = committed.ranks.as[(Long, Double)].collect().sortBy(_._1)
+    val b = mem.ranks.as[(Long, Double)].collect().sortBy(_._1)
+    assert(a.length == 90 && b.length == 90)
+    for (((ia, ra), (ib, rb)) <- a.zip(b)) {
+      assert(ia == ib)
+      assert(math.abs(ra - rb) < 1e-12, s"vertex $ia: $ra vs $rb")
+    }
+  }
+
+  test("resume: re-running a converged CC or LPA log runs 0 supersteps, same labels") {
+    import spark.implicits._
+    import graft.algo.{ConnectedComponents, LabelPropagation}
+    // cliques plus isolated vertices: synchronous LPA reaches a fixpoint
+    // (a star would oscillate between its center's and its leaves' labels)
+    val cliques = Seq(Seq(0, 1, 2), Seq(3, 4, 5, 6), Seq(7, 8, 9))
+      .flatMap(c => for (a <- c; b <- c if a < b) yield (a.toLong, b.toLong))
+    val eds = spark.createDataset(cliques.map(e => Edge(e._1, e._2)))
+    val verts = spark.range(12).toDF("id")
+
+    val ccRoot = tmp()
+    val cc = ConnectedComponents.runResumable(verts, eds, new Supersteps(ccRoot, "cc", spark))
+    assert(cc.metrics.last.delta == 0.0, "first run must converge")
+    val ccAgain = ConnectedComponents.runResumable(verts, eds, new Supersteps(ccRoot, "cc", spark))
+    assert(ccAgain.metrics.isEmpty && ccAgain.rounds == cc.rounds)
+    assert(ccAgain.components.as[(Long, Long)].collect().sorted.toSeq ==
+      cc.components.as[(Long, Long)].collect().sorted.toSeq)
+
+    val lpaRoot = tmp()
+    val lpa = LabelPropagation.runResumable(verts, eds,
+      new Supersteps(lpaRoot, "lpa", spark), maxIter = 20)
+    assert(lpa.iterations < 20 && lpa.metrics.last.rowsOut == 0L, "first run must converge")
+    val lpaAgain = LabelPropagation.runResumable(verts, eds,
+      new Supersteps(lpaRoot, "lpa", spark), maxIter = 20)
+    assert(lpaAgain.metrics.isEmpty && lpaAgain.iterations == lpa.iterations)
+    assert(lpaAgain.labels.as[(Long, Long)].collect().sorted.toSeq ==
+      lpa.labels.as[(Long, Long)].collect().sorted.toSeq)
+  }
+
   test("resume: BFS interrupted at depth 2 equals uninterrupted distances exactly") {
     import spark.implicits._
     import graft.algo.Bfs
