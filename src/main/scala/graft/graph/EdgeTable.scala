@@ -80,9 +80,4 @@ object EdgeTable {
     * skew-immune — every mapper pre-combines hub keys. */
   def degrees(edges: Dataset[Edge], key: String): DataFrame =
     edges.groupBy(col(key).as("id")).agg(count(lit(1)).as("degree"))
-
-  /** Heavy-hitter detection: vertices whose degree on `key` exceeds
-    * `threshold` — drives explicit salting decisions (SURVEY.md §4.1). */
-  def hubs(edges: Dataset[Edge], key: String, threshold: Long): DataFrame =
-    degrees(edges, key).filter(col("degree") >= threshold)
 }

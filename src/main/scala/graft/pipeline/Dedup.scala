@@ -512,16 +512,12 @@ object Dedup {
       warehouse: String, table: String = "shingle_index",
       n: Int = 3, buckets: Int = 16): Unit = {
     val spark = docs.sparkSession
-    import spark.implicits._
     val ds = docShingles(docs, idCol, textCol, n)
     val cat = new graft.tables.IcebergLite(warehouse)
     val props = Map("n" -> n.toString)
-    val snap = cat.commit(ds, table, props, bucketBy = Some(("shingle", buckets)))
-    val sizes = cat.read(spark, table).groupBy($"id")
-      .agg(count(lit(1)).as("sz"))
-    cat.commit(sizes, s"${table}_sizes",
-      props + ("syncedTo" -> snap.snapshotId.toString),
-      bucketBy = Some(("id", math.max(2, buckets / 2))))
+    cat.commit(ds, table, props, bucketBy = Some(("shingle", buckets)))
+    cat.commitSidecar(spark, table, s"${table}_sizes", props,
+      bucketBy = Some(("id", math.max(2, buckets / 2))))(sizesOf)
     ()
   }
 
@@ -543,67 +539,20 @@ object Dedup {
     healSizesSidecar(ds.sparkSession, cat, table)
   }
 
-  /** [[Similarity.healSidecar]]'s analog for the `<table>_sizes` sidecar of
-    * a committed postings table: the postings append and the sizes append
-    * are two commits, and a crash between them would leave incremental
-    * verify reading stale union sizes for the lost batch's docs. Every
-    * sizes snapshot records `syncedTo` = the postings snapshot it covers;
-    * healing walks the postings chain from there, deriving each missed
-    * fast-append's per-doc counts from its delta files (exact because doc
-    * ids are a primary key across the table's lifetime — a doc's postings
-    * land in exactly one append). Unwalkable chains (full-replacement or
-    * compaction snapshots in the gap, expired manifests) re-derive the
-    * whole sidecar from the postings table once. */
+  /** The `<table>_sizes` sidecar format: distinct shingles per doc. Exact
+    * per appended delta because doc ids are a primary key across the
+    * table's lifetime — a doc's postings land in exactly one append. */
+  private def sizesOf(postings: DataFrame): DataFrame =
+    postings.groupBy(col("id")).agg(count(lit(1)).as("sz"))
+
+  /** Bring a committed postings table's `<table>_sizes` sidecar level with
+    * it ([[graft.tables.IcebergLite.syncSidecar]]): the postings append and
+    * the sizes append are two commits, and a crash between them would leave
+    * incremental verify reading stale union sizes for the lost batch's
+    * docs. */
   private[graft] def healSizesSidecar(spark: org.apache.spark.sql.SparkSession,
-      cat: graft.tables.IcebergLite, table: String): Unit = {
-    import org.apache.spark.sql.functions.{col, count, lit}
-    val sizesTable = s"${table}_sizes"
-    val mainSnap = cat.currentSnapshot(table).getOrElse(return)
-    val sideSnap = cat.currentSnapshot(sizesTable).getOrElse(return)
-    val baseProps = sideSnap.properties - "appendedRows" - "syncedTo"
-    def sizesOf(postings: DataFrame): DataFrame =
-      postings.groupBy(col("id")).agg(count(lit(1)).as("sz"))
-    def recommit(): Unit = {
-      val spec = for {
-        c <- sideSnap.properties.get("bucketCol")
-        n <- sideSnap.properties.get("bucketCount")
-      } yield (c, n.toInt)
-      cat.commit(sizesOf(cat.read(spark, table)), sizesTable,
-        baseProps - "bucketCol" - "bucketCount" - "bucketDir" +
-          ("syncedTo" -> mainSnap.snapshotId.toString),
-        bucketBy = spec)
-      ()
-    }
-    sideSnap.properties.get("syncedTo").map(_.toLong) match {
-      case Some(s) if s >= mainSnap.snapshotId => ()
-      case Some(s) =>
-        val all = cat.snapshots(table)
-        val chain = all
-          .filter(x => x.snapshotId > s && x.snapshotId <= mainSnap.snapshotId)
-          .sortBy(_.snapshotId)
-        def isCompaction(x: graft.tables.Snapshot): Boolean =
-          x.properties.contains("compactedFromSnapshot") &&
-            !x.properties.contains("appendedRows")
-        // the syncedTo PARENT's manifest must still exist too: readAppended
-        // on snapshot s+1 silently degrades to the WHOLE table when its
-        // parent manifest is gone (an out-of-band expire between a crash
-        // and this heal), which would append every old doc's counts as a
-        // fake delta and corrupt union sizes — recommit instead
-        val walkable = all.exists(_.snapshotId == s) &&
-          chain.map(_.snapshotId) == (s + 1 to mainSnap.snapshotId) &&
-          chain.forall(x => x.properties.contains("appendedRows") || isCompaction(x))
-        if (walkable) {
-          def stampFor(v: Long): Long =
-            chain.filter(_.snapshotId > v).sortBy(_.snapshotId)
-              .takeWhile(isCompaction).lastOption.map(_.snapshotId).getOrElse(v)
-          chain.filterNot(isCompaction).foreach { x =>
-            cat.append(sizesOf(cat.readAppended(spark, table, x.snapshotId)),
-              sizesTable, baseProps + ("syncedTo" -> stampFor(x.snapshotId).toString))
-          }
-        } else recommit()
-      case None => recommit()
-    }
-  }
+      cat: graft.tables.IcebergLite, table: String): Unit =
+    cat.syncSidecar(spark, table, s"${table}_sizes")(sizesOf)
 
   /** Fast-append a new batch's shingle postings + sizes at the committed
     * `n` — O(batch), parent postings untouched. `compactOver`/`expireKeep`

@@ -520,94 +520,31 @@ object Similarity {
     val meansProp = cellMeans.map { case (c, m) => f"$c:$m%.6f" }.mkString(",")
     cat.commit(spark.createDataset(trained).toDF("cell", "cvec"),
       s"${table}_centroids", props + ("cellMeanSim" -> meansProp))
-    commitIdSidecar(spark, cat, s"${table}_cells", s"${table}_ids", props)
+    cat.commitSidecar(spark, s"${table}_cells", s"${table}_ids", props,
+      statsCol = Some("id"))(idRows("cell"))
+    ()
   }
 
-  /** Commit the id→cell/bucket SIDECAR of a committed index table: the
+  /** The id→cell/bucket SIDECAR format of a committed index table: the
     * member-id probe shape ("top-k for corpus member X") must locate X's
     * row, but the main table's manifest stats are on cell/bucket, so an id
     * lookup can't prune it — without the sidecar every member-id probe
     * re-reads the WHOLE index for its query rows. The sidecar holds only
-    * (id, cell), range-clustered and stats'd on `id`, so the lookup reads
-    * ~1/files of a 2-column table. Source rows come from reading the just-
-    * committed main table back (a column-pruned parquet scan — cheaper than
-    * re-running assignment) so sidecar and table can never disagree. */
-  private def commitIdSidecar(spark: org.apache.spark.sql.SparkSession,
-      cat: graft.tables.IcebergLite, mainTable: String, idsTable: String,
-      props: Map[String, String], valueCol: String = "cell"): Unit = {
-    val mainSid = cat.currentSnapshot(mainTable).get.snapshotId
-    val ids = cat.read(spark, mainTable).select(col("id"), col(valueCol))
-      .repartitionByRange(8, col("id"))
-    cat.commit(ids, idsTable, props + ("syncedTo" -> mainSid.toString),
-      statsCol = Some("id"))
-    ()
-  }
+    * (id, cell), committed range-clustered and stats'd on `id`
+    * ([[graft.tables.IcebergLite.commitSidecar]]), so the lookup reads
+    * ~1/files of a 2-column table. */
+  private def idRows(valueCol: String)(main: DataFrame): DataFrame =
+    main.select(col("id"), col(valueCol))
 
-  /**
-   * Bring a committed index's id SIDECAR up to date with its main table —
-   * the non-atomicity repair: the main-table append and the sidecar append
-   * are two separate commits, and a crash between them leaves the sidecar
-   * lagging FOREVER under the streaming replay guard (the guard keys on the
-   * MAIN table's batchId, so the retried micro-batch is skipped and the
-   * sidecar row never lands — member-id probes then silently miss that
-   * batch's ids). Every sidecar snapshot records `syncedTo` = the main
-   * snapshot id it covers; healing walks the main chain from there and
-   * appends each missed fast-append's delta — O(missed deltas), normally
-   * exactly the one batch just appended. Chains that can't be walked
-   * delta-wise (a full-replacement or compaction snapshot in the gap, a
-   * pre-`syncedTo` sidecar, expired intermediate manifests) heal by one
-   * full sidecar re-commit instead. Called on every append path, and by
-   * the streaming sink's replay-skip branch (the exact crash window the
-   * guard otherwise seals shut).
-   */
+  /** Bring a committed index's id sidecar level with its main table
+    * ([[graft.tables.IcebergLite.syncSidecar]]: replays the deltas a crash
+    * between the two appends left missing). Called on every append path,
+    * and by the streaming sink's replay-skip branch — the exact crash window
+    * the batchId guard otherwise seals shut. */
   private[graft] def healSidecar(spark: org.apache.spark.sql.SparkSession,
       cat: graft.tables.IcebergLite, mainTable: String, idsTable: String,
-      valueCol: String = "cell"): Unit = {
-    val mainSnap = cat.currentSnapshot(mainTable).getOrElse(return)
-    val sideSnap = cat.currentSnapshot(idsTable).getOrElse(return)
-    val syncedTo = sideSnap.properties.get("syncedTo").map(_.toLong)
-    val baseProps = sideSnap.properties - "appendedRows" - "syncedTo"
-    syncedTo match {
-      case Some(s) if s >= mainSnap.snapshotId => () // in lockstep
-      case Some(s) =>
-        val all = cat.snapshots(mainTable)
-        val chain = all
-          .filter(x => x.snapshotId > s && x.snapshotId <= mainSnap.snapshotId)
-          .sortBy(_.snapshotId)
-        def isCompaction(x: graft.tables.Snapshot): Boolean =
-          x.properties.contains("compactedFromSnapshot") &&
-            !x.properties.contains("appendedRows")
-        // walkable = contiguous chain of fast appends and compactions
-        // (compactions rewrite layout, not logical rows — skipped, but a
-        // trailing one still advances the recorded high-water mark) AND the
-        // syncedTo parent's manifest still exists — readAppended on s+1
-        // degrades to the WHOLE table when its parent manifest is gone
-        // (out-of-band expire), which would duplicate every old id in the
-        // sidecar; anything else (full-replacement commit, expired gap)
-        // heals by one full sidecar re-commit
-        val walkable = all.exists(_.snapshotId == s) &&
-          chain.map(_.snapshotId) == (s + 1 to mainSnap.snapshotId) &&
-          chain.forall(x => x.properties.contains("appendedRows") || isCompaction(x))
-        if (walkable) {
-          // stamp each delta with the furthest snapshot it brings the
-          // sidecar level with (its own id, plus any compactions right after)
-          def stampFor(v: Long): Long =
-            chain.filter(_.snapshotId > v).sortBy(_.snapshotId)
-              .takeWhile(isCompaction).lastOption.map(_.snapshotId).getOrElse(v)
-          chain.filterNot(isCompaction).foreach { x =>
-            val delta = cat.readAppended(spark, mainTable, x.snapshotId)
-              .select(col("id"), col(valueCol))
-              .repartitionByRange(2, col("id"))
-            cat.append(delta, idsTable,
-              baseProps + ("syncedTo" -> stampFor(x.snapshotId).toString),
-              statsCol = Some("id"))
-          }
-        } else commitIdSidecar(spark, cat, mainTable, idsTable, baseProps, valueCol)
-      case None =>
-        // legacy sidecar (no syncedTo recorded): one full re-commit
-        commitIdSidecar(spark, cat, mainTable, idsTable, baseProps, valueCol)
-    }
-  }
+      valueCol: String = "cell"): Unit =
+    cat.syncSidecar(spark, mainTable, idsTable)(idRows(valueCol))
 
   /**
    * Append newly ingested vectors to a COMMITTED IVF index without
@@ -692,10 +629,10 @@ object Similarity {
     cat.append(cells, s"${table}_cells", inherited ++ driftProp ++ extraProps,
       statsCol = Some("cell"))
     cells.unpersist()
-    // keep the id sidecar in lockstep via the self-healing walk: it appends
-    // this batch's delta AND any delta a previous crash left missing — see
-    // [[healSidecar]]. An index built before the sidecar existed simply has
-    // none; probes fall back to the full scan.
+    // keep the id sidecar in lockstep: the sync appends this batch's delta
+    // AND any delta a previous crash left missing
+    // ([[graft.tables.IcebergLite.syncSidecar]]). An index built before the
+    // sidecar existed simply has none; probes fall back to the full scan.
     healSidecar(spark, cat, s"${table}_cells", s"${table}_ids")
     // optional housekeeping for long BATCH append chains — the same knobs
     // [[graft.streaming.IndexStream]] wires for streaming maintenance
@@ -1023,8 +960,9 @@ object Similarity {
     val props = Map("planes" -> planes.toString, "seed" -> seed.toString,
       "dim" -> d.toString)
     cat.commit(bucketed, s"${table}_buckets", props, statsCol = Some("bucket"))
-    commitIdSidecar(spark, cat, s"${table}_buckets", s"${table}_ids", props,
-      valueCol = "bucket")
+    cat.commitSidecar(spark, s"${table}_buckets", s"${table}_ids", props,
+      statsCol = Some("id"))(idRows("bucket"))
+    ()
   }
 
   /**
@@ -1094,7 +1032,8 @@ object Similarity {
     cat.append(bucketed, s"${table}_buckets", inherited ++ extraProps,
       statsCol = Some("bucket"))
     // self-healing lockstep — covers this batch AND any sidecar gap a crash
-    // between the two appends left behind ([[healSidecar]])
+    // between the two appends left behind
+    // ([[graft.tables.IcebergLite.syncSidecar]])
     healSidecar(spark, cat, s"${table}_buckets", s"${table}_ids",
       valueCol = "bucket")
     cat.maintain(spark, s"${table}_buckets", compactOver, expireKeep)

@@ -23,8 +23,8 @@ import graft.tables.IcebergLite
  * but not others replays into per-table skips that converge (this is why
  * the MinHash path appends its postings and bucket tables under separate
  * guards rather than through [[Dedup.appendToMinhashIndex]]). The sizes
- * sidecars need no marker — their `syncedTo` healing walk is idempotent
- * by construction.
+ * sidecars need no marker — their sync ([[IcebergLite.syncSidecar]]) is
+ * idempotent by construction.
  *
  * The indexes must already exist (built over a seed corpus) — committed
  * parameters are what make appends consistent with the build. If

@@ -26,10 +26,12 @@ import graft.tables.IcebergLite
  */
 object IndexStream {
 
-  /** `compactOver > 0`: when the cells manifest exceeds that many files,
-    * fold them down in-stream — [[IcebergLite.compact]] recomputes the
-    * per-file stats over range-clustered files, so manifest pruning AND the
-    * batchId guard both survive the rewrite.
+  /** `compactOver > 0`: when the cells manifest (or the id sidecar's)
+    * exceeds that many files, fold it down in-stream through
+    * [[IcebergLite.maintain]] ([[Similarity.appendAssigned]] runs it on
+    * both tables) — compaction recomputes the per-file stats over
+    * range-clustered files, so manifest pruning AND the batchId guard both
+    * survive the rewrite.
     *
     * `expireKeep > 0` additionally expires all but that many snapshots
     * after each compaction ([[IcebergLite.expireSnapshots]]) — the
@@ -39,8 +41,9 @@ object IndexStream {
     * current snapshot — properties (batchId idempotence guard, build
     * params) and live data files — is always kept, so probes, replays, and
     * resume survive expiry; keep it large enough to cover any reader still
-    * time-traveling. */
-  /** `neardupThreshold` (when not NaN): CONTINUOUS SemDeDup — each
+    * time-traveling.
+    *
+    * `neardupThreshold` (when not NaN): CONTINUOUS SemDeDup — each
     * micro-batch's incremental near-dup pairs (new-vs-corpus + new-vs-new,
     * at the frozen quantizer; [[Similarity.embeddingIncrPlan]]) are
     * appended to `pairsTable` (default `<table>_pairs`) BEFORE the cells
@@ -85,28 +88,17 @@ object IndexStream {
         if (alreadyCommitted) {
           // the replay-skip is exactly the window where a crash between the
           // cells append and the sidecar append would otherwise leave the
-          // sidecar lagging forever — heal it here (no-op when in lockstep)
+          // sidecar lagging forever — heal it here (no-op when in lockstep;
+          // [[IcebergLite.syncSidecar]])
           Similarity.healSidecar(batch.sparkSession, cat,
             s"${table}_cells", s"${table}_ids")
         } else if (!neardupThreshold.isNaN) {
           neardupBatch(cat, table, pt, batch, idCol, vecCol,
-            neardupThreshold, batchId)
+            neardupThreshold, batchId, compactOver, expireKeep)
         } else {
           Similarity.appendToIvfIndex(batch, idCol, vecCol, warehouse, table,
-            extraProps = Map("batchId" -> batchId.toString))
-        }
-        if (!alreadyCommitted && compactOver > 0 &&
-            cat.currentSnapshot(s"${table}_cells")
-              .exists(_.files.size > compactOver)) {
-          cat.compact(spark, s"${table}_cells",
-            targetFiles = math.max(1, compactOver / 4))
-          if (expireKeep > 0) {
-            cat.expireSnapshots(s"${table}_cells", keepLast = expireKeep)
-            // the id sidecar fast-appends in lockstep with the cells
-            // table, so its snapshot log needs the same bounding
-            if (cat.currentSnapshot(s"${table}_ids").nonEmpty)
-              cat.expireSnapshots(s"${table}_ids", keepLast = expireKeep)
-          }
+            extraProps = Map("batchId" -> batchId.toString),
+            compactOver = compactOver, expireKeep = expireKeep)
         }
         ()
       }
@@ -122,7 +114,7 @@ object IndexStream {
     * against exactly the state the pairs were derived from). */
   private[graft] def neardupBatch(cat: IcebergLite, table: String, pt: String,
       batch: DataFrame, idCol: String, vecCol: String, threshold: Double,
-      batchId: Long): Unit = {
+      batchId: Long, compactOver: Int = 0, expireKeep: Int = 0): Unit = {
     StreamGuards.checkBatchId(cat, pt, batchId)
     val cs = Similarity.committedCentroids(batch.sparkSession, cat, table)
     val cells = Similarity.assignCells(batch, idCol, vecCol, cs)
@@ -137,7 +129,8 @@ object IndexStream {
       else cat.append(pairs, pt, Map("batchId" -> batchId.toString))
     }
     Similarity.appendAssigned(cells, cat, table, cs,
-      extraProps = Map("batchId" -> batchId.toString))
+      extraProps = Map("batchId" -> batchId.toString),
+      compactOver = compactOver, expireKeep = expireKeep)
     cells.unpersist()
   }
 }

@@ -6,6 +6,7 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 
 /** Missing table / snapshot — a user-input-shaped failure (wrong warehouse
   * path, never-committed table), typed so CLI boundaries can render it as a
@@ -508,6 +509,98 @@ class IcebergLite(rootDir: String) {
       if (expireKeep > 0) expireSnapshots(table, keepLast = expireKeep)
       ()
     }
+  }
+
+  // --------------------------------------------------------------------------
+  // Committed sidecars: tables derived from a main table, kept in its chain
+  // --------------------------------------------------------------------------
+
+  /** Commit `side` as `derive` over `main`'s current snapshot — a committed
+    * SIDECAR (an id→cell lookup, per-doc counts) that must never disagree
+    * with the table it is derived from, so its rows come from reading `main`
+    * back, not from the caller's in-flight frame. The snapshot records
+    * `syncedTo` = the `main` snapshot it covers, where [[syncSidecar]] later
+    * resumes. Layout: `statsCol` range-clusters the rows into 8 files with
+    * manifest stats on that column; `bucketBy` commits the bucketed layout.
+    * Either lands in the sidecar's own properties, so every later sync
+    * keeps it. */
+  def commitSidecar(spark: SparkSession, main: String, side: String,
+      properties: Map[String, String],
+      statsCol: Option[String] = None,
+      bucketBy: Option[(String, Int)] = None)
+      (derive: DataFrame => DataFrame): Snapshot = {
+    val mainSid = currentSnapshot(main)
+      .getOrElse(throw NoSuchTable(s"table $main has no snapshots")).snapshotId
+    val rows = derive(read(spark, main, mainSid))
+    commit(statsCol.fold(rows)(c => rows.repartitionByRange(8, col(c))), side,
+      properties + ("syncedTo" -> mainSid.toString), statsCol, bucketBy)
+  }
+
+  /**
+   * Bring `side` level with `main` — the non-atomicity repair: the main
+   * append and the sidecar append are two commits, and a crash between them
+   * leaves the sidecar lagging FOREVER under a streaming replay guard (the
+   * guard keys on the MAIN table's batchId, so the retried micro-batch is
+   * skipped and the sidecar rows never land). The walk starts at the
+   * sidecar's `syncedTo` and appends `derive` over each missed fast
+   * append's delta — O(missed deltas), normally exactly the batch just
+   * appended; compactions rewrite layout, not rows, so they are skipped but
+   * advance the stamp. Exact only for a derive that is additive over
+   * appends (a projection; a per-key count whose keys land in one append).
+   * Anything the walk can't follow ([[walkableChain]]) or a sidecar with no
+   * stamp re-derives the whole sidecar once through [[commitSidecar]], in
+   * the layout its current snapshot records. No-op when `main` or `side`
+   * has no snapshot, or when already level — idempotent.
+   */
+  def syncSidecar(spark: SparkSession, main: String, side: String)
+      (derive: DataFrame => DataFrame): Unit = {
+    val mainSnap = currentSnapshot(main).getOrElse(return)
+    val sideSnap = currentSnapshot(side).getOrElse(return)
+    val syncedTo = sideSnap.properties.get("syncedTo").map(_.toLong)
+    if (syncedTo.exists(_ >= mainSnap.snapshotId)) return // in lockstep
+    val statsCol = sideSnap.properties.get("statsCol")
+    // per-snapshot markers and layout keys; commit/append re-add the layout
+    val props = sideSnap.properties -- Seq("appendedRows", "syncedTo",
+      "compactedFromSnapshot", "compactedFromFiles",
+      "statsCol", "bucketCol", "bucketCount", "bucketDir")
+    syncedTo.flatMap(walkableChain(main, _, mainSnap.snapshotId)) match {
+      case Some(chain) =>
+        // stamp each delta with the furthest snapshot it brings the sidecar
+        // level with: its own id, plus any compactions right after it
+        def stampFor(v: Long): Long =
+          chain.filter(_.snapshotId > v).takeWhile(isCompaction)
+            .lastOption.map(_.snapshotId).getOrElse(v)
+        chain.filterNot(isCompaction).foreach { x =>
+          val rows = derive(readAppended(spark, main, x.snapshotId))
+          append(statsCol.fold(rows)(c => rows.repartitionByRange(2, col(c))),
+            side, props + ("syncedTo" -> stampFor(x.snapshotId).toString),
+            statsCol)
+        }
+      case None =>
+        commitSidecar(spark, main, side, props, statsCol,
+          bucketSpecOf(sideSnap).map { case (c, n, _) => (c, n) })(derive)
+    }
+  }
+
+  /** A rewrite of the data files that carries no new rows. */
+  private def isCompaction(s: Snapshot): Boolean =
+    s.properties.contains("compactedFromSnapshot") &&
+      !s.properties.contains("appendedRows")
+
+  /** `table`'s snapshots `(from, to]`, if a sidecar synced to `from` can
+    * follow them delta by delta: the ids are contiguous, each is a fast
+    * append or a compaction, and snapshot `from` itself still exists —
+    * [[readAppended]] on `from + 1` degrades to the WHOLE table when its
+    * parent manifest is gone (an expire between a crash and the sync),
+    * which would duplicate every old row in the sidecar. */
+  private def walkableChain(table: String, from: Long, to: Long)
+      : Option[Seq[Snapshot]] = {
+    val all = snapshots(table)
+    val chain = all.filter(x => x.snapshotId > from && x.snapshotId <= to)
+    val walkable = all.exists(_.snapshotId == from) &&
+      chain.map(_.snapshotId) == (from + 1 to to) &&
+      chain.forall(x => x.properties.contains("appendedRows") || isCompaction(x))
+    if (walkable) Some(chain) else None
   }
 
   /** Read a table at its current (or an explicit) snapshot. */
