@@ -1,6 +1,6 @@
 package graft.graph
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Observation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -42,6 +42,11 @@ case class LinkGraph(
  *  - dangling-link drop (P6)    → the same join's inner semantics
  *  - redirect-loop drop (P7)    → iterative self-join chain resolution
  *  - dense id assignment        → [[Dictionary.assignIds]] (sorted-url order)
+ *  - A1 statistics gathered while parsing (`WikiProcessor.kt:174-222`) →
+ *    `Dataset.observe` (Catalyst `CollectMetrics`) on the passes that fill
+ *    the extract cache, the pages checkpoint and the edge relation, so no
+ *    statistic runs an aggregate of its own; each redirect step is one
+ *    action
  *
  * DIVERGENCE (deliberate, documented): the reference's `dropRedirectLoops`
  * (`WikiProcessor.kt:133-172`) mutates pointers during map iteration, so
@@ -70,8 +75,9 @@ object GraphBuilder {
 
     // 1. Extract: one narrow pass; html pruned immediately after.
     //    Duplicate urls (re-crawls) resolved to the latest warc_ts
-    //    deterministically (ties broken by html hash).
-    val extracted = raw
+    //    deterministically (ties broken by html hash). The pre-cleanup A1
+    //    statistics are observed on this pass as it fills the cache.
+    val (extractedView, before) = observed(raw
       .filter(pageFilter)
       .select(
         normalize_url($"url").as("url"),
@@ -83,15 +89,22 @@ object GraphBuilder {
         org.apache.spark.sql.expressions.Window.partitionBy($"url")
           .orderBy($"warc_ts".desc, $"__tiebreak".desc)))
       .filter($"__rn" === 1)
-      .drop("__rn", "__tiebreak", "warc_ts")
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .drop("__rn", "__tiebreak", "warc_ts"),
+      count(when($"redirect_to".isNull, 1)).as("articles"),
+      count(when($"redirect_to".isNotNull, 1)).as("redirects"),
+      coalesce(sum(when($"redirect_to".isNull, size($"links")).otherwise(1L)),
+        lit(0L)).as("links"))
+    val extracted = extractedView.persist(StorageLevel.MEMORY_AND_DISK)
+    extracted.count()
+    val statsBefore = {
+      val m = before()
+      GraphStats(m("articles"), m("redirects"), m("links"), nullLinkCount = 0L)
+    }
 
     val articles = extracted.filter($"redirect_to".isNull)
       .select($"url", $"links")
     val redirects = extracted.filter($"redirect_to".isNotNull)
       .select($"url", $"redirect_to")
-
-    val statsBefore = stats(extracted, spark)
 
     // 2. Redirect chain resolution (P7). Driver-looped self-joins: state is
     //    (url, cur) where cur is where the chain currently points. A row is
@@ -103,39 +116,41 @@ object GraphBuilder {
     val articleUrls = articles.select($"url".as("a_url"))
       .persist(StorageLevel.MEMORY_AND_DISK)
 
-    //    Lineage control: each superstep's state is localCheckpoint-ed so the
-    //    plan stays O(1)-deep (SURVEY.md §7.4 risk 3); in the table-backed
-    //    variant this is a Supersteps commit instead.
+    //    One action per step: the classified rows are localCheckpoint-ed,
+    //    which keeps the plan O(1)-deep (SURVEY.md §7.4 risk 3), and the
+    //    count of rows still chasing is observed on that same pass; the next
+    //    state is a filter of the checkpoint. Columns are joined by their
+    //    (distinct) names: the first state is a projection of `redirectMap`.
     //    Termination: every iteration, the chain member closest to a terminal
     //    resolves (distances are downward closed — intermediate chain members
     //    are themselves rows), so a non-decreasing `remaining` means only
     //    cycles are left ⇒ drop them and stop.
     var state = redirectMap.select($"r_url".as("url"), $"r_tgt".as("cur"))
-      .localCheckpoint(true)
     var okUrls = spark.emptyDataset[String].toDF("url")
     var iter = 0
-    var remaining = state.count()
+    var remaining = statsBefore.redirectCount
     var prevRemaining = Long.MaxValue
     while (remaining > 0 && remaining < prevRemaining && iter < MaxChain) {
       // classify cur: redirect -> keep chasing; article -> ok; missing -> dead
-      val cls = state
-        .join(redirectMap, state("cur") === redirectMap("r_url"), "left")
-        .join(articleUrls, state("cur") === articleUrls("a_url"), "left")
-        .select($"url", $"cur", $"r_tgt", $"a_url")
-        .localCheckpoint(true)
+      val (clsView, chasing) = observed(state
+        .join(redirectMap, $"cur" === $"r_url", "left")
+        .join(articleUrls, $"cur" === $"a_url", "left")
+        .select($"url", $"cur", $"r_tgt", $"a_url"),
+        count(when($"r_tgt".isNotNull, 1)).as("n"))
+      val cls = clsView.localCheckpoint(true)
       okUrls = okUrls.union(
         cls.filter($"r_tgt".isNull && $"a_url".isNotNull).select($"url"))
       state = cls.filter($"r_tgt".isNotNull).select($"url", $"r_tgt".as("cur"))
-        .localCheckpoint(true)
       prevRemaining = remaining
-      remaining = state.count()
+      remaining = chasing()("n")
       iter += 1
     }
-    // anything still chasing = cycle or chain-into-cycle ⇒ dropped
-    val surviving = okUrls.distinct().localCheckpoint(true)
-
+    // anything still chasing = cycle or chain-into-cycle ⇒ dropped. Each
+    // state row yields one classified row (r_url and a_url are unique keys)
+    // and leaves the state once resolved, so `okUrls` is already distinct:
+    // a union of filters over the step checkpoints, not materialized again.
     val liveRedirects = redirectMap
-      .join(surviving, redirectMap("r_url") === surviving("url"), "left_semi")
+      .join(okUrls, $"r_url" === $"url", "left_semi")
       .select($"r_url".as("url"), $"r_tgt".as("redirect_to"))
 
     // 3. Node relation + dense ids (sorted-url order).
@@ -145,42 +160,44 @@ object GraphBuilder {
       if (smallIds) (Dictionary.assignIdsSmall(nodes, "url"), () => ())
       else Dictionary.assignIdsWithHandle(nodes, "url")
     // localCheckpoint (not persist): materializes AND severs lineage, so the
-    // dictionary's internal cache can be released immediately
-    val pages = withIds.select($"id", $"url", $"isRedirect").as[Page]
-      .localCheckpoint(true)
+    // dictionary's internal cache can be released immediately; the
+    // post-cleanup node counts are observed on the same pass
+    val (pagesView, after) = observed(withIds.select($"id", $"url", $"isRedirect"),
+      count(when(!$"isRedirect", 1)).as("articles"),
+      count(when($"isRedirect", 1)).as("redirects"))
+    val pages = pagesView.as[Page].localCheckpoint(true)
     releaseDict()
 
     // 4. Edge relation: explode article links + redirect single-edges, then
     //    resolve BOTH endpoints against pages (inner join drops dangling, P6).
-    //    Per-source dedup (P5) via distinct.
-    val rawEdges = articles
+    //    Per-source dedup (P5) via distinct. nullLinkCount after cleanup =
+    //    raw link occurrences whose target is not a live page: rows observed
+    //    before the endpoint joins minus rows after them (every src_url
+    //    resolves — it is an article or a surviving redirect).
+    val (rawEdges, rawCount) = observed(articles
       .select($"url".as("src_url"), explode($"links").as("dst_url"))
-      .union(liveRedirects.select($"url".as("src_url"), $"redirect_to".as("dst_url")))
+      .union(liveRedirects.select($"url".as("src_url"), $"redirect_to".as("dst_url"))),
+      count(lit(1)).as("n"))
     val pSrc = pages.select($"id".as("src"), $"url".as("src_url"))
     val pDst = pages.select($"id".as("dst"), $"url".as("dst_url"))
-    val edges = rawEdges
+    val (resolvedEdges, resolved) = observed(rawEdges
       .join(pSrc, "src_url")
-      .join(pDst, "dst_url")
+      .join(pDst, "dst_url"),
+      count(lit(1)).as("n"))
+    val edges = resolvedEdges
       .select($"src", $"dst")
       .distinct()
       .as[Edge]
       .persist(StorageLevel.MEMORY_AND_DISK)
+    val linkCount = edges.count()
 
     val statsAfter = {
-      val pc = pages.groupBy($"isRedirect").count().as[(Boolean, Long)]
-        .collect().toMap
-      val ec = edges.count()
-      // nullLinkCount after cleanup = raw link occurrences whose target does
-      // not exist as a live page (dangling, dropped by the join) — one
-      // left-join aggregate pass computes raw and resolved together
-      val (rawCount, resolved) = rawEdges
-        .join(pDst, Seq("dst_url"), "left")
-        .agg(count(lit(1)), count($"dst")).as[(Long, Long)].head()
+      val m = after()
       GraphStats(
-        articleCount = pc.getOrElse(false, 0L),
-        redirectCount = pc.getOrElse(true, 0L),
-        linkCount = ec,
-        nullLinkCount = rawCount - resolved)
+        articleCount = m("articles"),
+        redirectCount = m("redirects"),
+        linkCount = linkCount,
+        nullLinkCount = rawCount()("n") - resolved()("n"))
     }
 
     // every ETL-scoped cache released; `edges` stays persisted (it is the
@@ -191,14 +208,24 @@ object GraphBuilder {
     LinkGraph(pages, edges, statsBefore, statsAfter)
   }
 
-  /** Pre-cleanup stats over the extracted view (A1 analog). */
-  private def stats(extracted: DataFrame, spark: SparkSession): GraphStats = {
-    import spark.implicits._
-    val row = extracted.agg(
-      sum(when($"redirect_to".isNull, 1L).otherwise(0L)).as("articles"),
-      sum(when($"redirect_to".isNotNull, 1L).otherwise(0L)).as("redirects"),
-      sum(when($"redirect_to".isNull, size($"links")).otherwise(1L)).as("links"))
-      .as[(Long, Long, Long)].head()
-    GraphStats(row._1, row._2, row._3, nullLinkCount = 0L)
+  /** `df` with `metrics` observed on it (Catalyst `CollectMetrics`), and a
+    * reader of those metrics by name that blocks until the action running
+    * the observed plan has reported. Each metric must be non-null on empty
+    * input (`count(when(..))`, a coalesced sum). AQE drops a finished stage
+    * from its final plan when a stage above it came out empty; the
+    * observation then completes without metrics, and the reader computes
+    * them with `df.agg` as an action of its own. */
+  private def observed(df: DataFrame, metrics: Column*)
+      : (DataFrame, () => Map[String, Long]) = {
+    val o = Observation()
+    lazy val values: Map[String, Long] = {
+      val seen = o.get
+      val row = if (seen.nonEmpty) seen else {
+        val r = df.agg(metrics.head, metrics.tail: _*).head()
+        r.getValuesMap[Any](r.schema.fieldNames.toSeq)
+      }
+      row.map { case (k, v) => k -> v.asInstanceOf[Long] }
+    }
+    (df.observe(o, metrics.head, metrics.tail: _*), () => values)
   }
 }

@@ -1,6 +1,10 @@
 package graft.graph
 
-import org.apache.spark.sql.SparkSession
+import java.util.concurrent.{Callable, ExecutionException, Executors}
+
+import scala.util.{Failure, Success}
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.tables.{IcebergLite, Snapshot}
@@ -21,57 +25,73 @@ import graft.tables.{IcebergLite, Snapshot}
  * All committed through Iceberg-lite so downstream jobs read a consistent
  * snapshot and the build itself is resumable (re-running skips tables whose
  * snapshot already carries the same `buildId`).
+ *
+ * The tables are independent, so [[build]] commits them concurrently, one
+ * thread per pending table; each table's snapshot is still atomic. If a
+ * commit fails, `build` waits for the others to end and then rethrows the
+ * first failure in table order: the tables that did commit keep their
+ * snapshots, and a re-run with the same `buildId` commits only the rest.
  */
 object GraphTables {
 
-  val Tables: Seq[String] = Seq("pages_by_url", "pages_by_id", "edges_by_src",
-    "edges_by_dst", "adjacency_out", "adjacency_in", "stats")
+  /** Each committed table with the frame it is written from, given the
+    * built graph, the shuffle partition count and the CSR salt buckets. */
+  private val layouts: Seq[(String, (LinkGraph, Int, Int) => DataFrame)] = Seq(
+    "pages_by_url" -> ((g, parts, _) =>
+      g.pages.repartitionByRange(parts, col("url")).sortWithinPartitions("url").toDF()),
+    "pages_by_id" -> ((g, parts, _) =>
+      g.pages.repartitionByRange(parts, col("id")).sortWithinPartitions("id").toDF()),
+    "edges_by_src" -> ((g, parts, _) => EdgeTable.bySrc(g.edges, parts).toDF()),
+    "edges_by_dst" -> ((g, parts, _) => EdgeTable.bySrc(g.reversed, parts).toDF()),
+    "adjacency_out" -> ((g, _, salt) => EdgeTable.packAdjacencySalted(g.edges, salt).toDF()),
+    "adjacency_in" -> ((g, _, salt) => EdgeTable.packAdjacencySalted(g.reversed, salt).toDF()),
+    "stats" -> ((g, _, _) => statsFrame(g)))
 
-  /** Build + commit every physical table; returns snapshots per table. */
+  val Tables: Seq[String] = layouts.map(_._1)
+
+  private def statsFrame(g: LinkGraph): DataFrame = {
+    val spark = g.pages.sparkSession
+    import spark.implicits._
+    def row(phase: String, s: GraphStats) =
+      (phase, s.articleCount, s.redirectCount, s.linkCount, s.nullLinkCount)
+    Seq(row("before", g.statsBefore), row("after", g.statsAfter))
+      .toDF("phase", "articles", "redirects", "links", "null_links")
+  }
+
+  /** Build + commit every physical table not yet committed under `buildId`;
+    * returns the new snapshots per table. */
   def build(graph: LinkGraph, warehouse: String, buildId: String,
       saltBuckets: Int = 16): Map[String, Snapshot] = {
     val spark = graph.pages.sparkSession
-    import spark.implicits._
     val cat = new IcebergLite(warehouse)
     val parts = spark.sessionState.conf.numShufflePartitions
     val props = Map("buildId" -> buildId)
 
-    def done(table: String): Boolean =
+    val pending = layouts.filterNot { case (table, _) =>
       cat.currentSnapshot(table).exists(_.properties.get("buildId").contains(buildId))
+    }.map { case (table, layout) => table -> layout(graph, parts, saltBuckets) }
+    if (pending.isEmpty) return Map.empty
 
-    val out = scala.collection.mutable.Map[String, Snapshot]()
-    if (!done("pages_by_url"))
-      out("pages_by_url") = cat.commit(
-        graph.pages.repartitionByRange(parts, $"url").sortWithinPartitions("url").toDF(),
-        "pages_by_url", props)
-    if (!done("pages_by_id"))
-      out("pages_by_id") = cat.commit(
-        graph.pages.repartitionByRange(parts, $"id").sortWithinPartitions("id").toDF(),
-        "pages_by_id", props)
-    if (!done("edges_by_src"))
-      out("edges_by_src") = cat.commit(
-        EdgeTable.bySrc(graph.edges, parts).toDF(), "edges_by_src", props)
-    if (!done("edges_by_dst"))
-      out("edges_by_dst") = cat.commit(
-        EdgeTable.bySrc(graph.reversed, parts).toDF(), "edges_by_dst", props)
-    if (!done("adjacency_out"))
-      out("adjacency_out") = cat.commit(
-        EdgeTable.packAdjacencySalted(graph.edges, saltBuckets).toDF(),
-        "adjacency_out", props)
-    if (!done("adjacency_in"))
-      out("adjacency_in") = cat.commit(
-        EdgeTable.packAdjacencySalted(graph.reversed, saltBuckets).toDF(),
-        "adjacency_in", props)
-    if (!done("stats")) {
-      val s = Seq(
-        ("before", graph.statsBefore.articleCount, graph.statsBefore.redirectCount,
-          graph.statsBefore.linkCount, graph.statsBefore.nullLinkCount),
-        ("after", graph.statsAfter.articleCount, graph.statsAfter.redirectCount,
-          graph.statsAfter.linkCount, graph.statsAfter.nullLinkCount))
-        .toDF("phase", "articles", "redirects", "links", "null_links")
-      out("stats") = cat.commit(s, "stats", props)
+    // the pool's threads are started by this (the caller's) thread, so each
+    // inherits its Spark local properties: job group, scheduler pool, tags
+    val pool = Executors.newFixedThreadPool(pending.size)
+    val ended = try {
+      val commits = pending.map { case (table, df) =>
+        table -> pool.submit(new Callable[Snapshot] {
+          def call(): Snapshot = cat.commit(df, table, props)
+        })
+      }
+      commits.map { case (table, f) =>
+        table -> (try Success(f.get()) catch { case e: ExecutionException => Failure(e.getCause) })
+      }
+    } finally pool.shutdownNow()
+
+    val failures = ended.collect { case (_, Failure(e)) => e }
+    failures.headOption.foreach { first =>
+      failures.tail.foreach(first.addSuppressed)
+      throw first
     }
-    out.toMap
+    ended.map { case (table, r) => table -> r.get }.toMap
   }
 
   /** Reopen the committed tables as a query-ready [[LinkGraph]]. */

@@ -107,4 +107,64 @@ class GraphBuilderSpec extends SparkTestBase {
     // adjacency arrays are sorted distinct
     plain.values.foreach(d => assert(d == d.distinct.sorted))
   }
+
+  test("empty input: zero stats on both sides; tables commit and reopen empty") {
+    val g = buildOf(Nil)
+    assert(g.statsBefore == GraphStats(0, 0, 0, 0))
+    assert(g.statsAfter == GraphStats(0, 0, 0, 0))
+    assert(g.pages.count() == 0 && g.edges.count() == 0)
+    val wh = java.nio.file.Files.createTempDirectory("graft-wh-empty").toString
+    assert(GraphTables.build(g, wh, buildId = "e1").keySet == GraphTables.Tables.toSet)
+    val reopened = GraphTables.open(spark, wh)
+    assert(reopened.pages.count() == 0 && reopened.edges.count() == 0)
+    assert(reopened.reversed.count() == 0)
+    assert(reopened.statsBefore == g.statsBefore && reopened.statsAfter == g.statsAfter)
+  }
+
+  test("stats stay exact when no edge survives: the dangling link is still counted") {
+    // Article→r2 dangles once the r1/r3 cycle and r2 are dropped
+    val g = buildOf(SynthCorpus.redirectCycle)
+    assert(g.statsBefore == GraphStats(1, 3, 4, 0))
+    assert(g.statsAfter == GraphStats(1, 0, 0, 1))
+  }
+
+  test("action count: build on a redirect chain runs 7 SQL executions") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    // rA→rB→rC→Real, the cycle c1⇄c2 and a dangling link: four redirect steps
+    val pages = Seq(
+      SynthCorpus.page("rA", Nil, redirectTo = Some("rB")),
+      SynthCorpus.page("rB", Nil, redirectTo = Some("rC")),
+      SynthCorpus.page("rC", Nil, redirectTo = Some("Real")),
+      SynthCorpus.page("Real", Seq("rA", "Gone")),
+      SynthCorpus.page("c1", Nil, redirectTo = Some("c2")),
+      SynthCorpus.page("c2", Nil, redirectTo = Some("c1")))
+    val raw = SynthCorpus.toDF(spark, pages).toDF()
+    // listener events arrive asynchronously but in order: count the
+    // executions strictly between a start and an end marker query
+    val Marker = "__graft_action_count_marker"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        seen.add(if (qe.analyzed.output.exists(_.name == Marker)) Marker else funcName)
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit =
+        seen.add(funcName)
+    }
+    def marker(): Unit = spark.range(1).toDF(Marker).collect()
+    spark.listenerManager.register(listener)
+    try {
+      marker()
+      val g = GraphBuilder.build(raw, smallIds = true)
+      marker()
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (seen.toArray.count(_ == Marker) < 2 && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      val events = seen.toArray.map(_.toString).toSeq
+      val between = events.dropWhile(_ != Marker).drop(1).takeWhile(_ != Marker)
+      assert(events.count(_ == Marker) == 2, events)
+      assert(slugEdges(g) == Set(("Real", "rA"), ("rA", "rB"), ("rB", "rC"), ("rC", "Real")))
+      assert(g.statsAfter == GraphStats(1, 3, 4, 1))
+      assert(between.size == 7, between)
+    } finally spark.listenerManager.unregister(listener)
+  }
 }
